@@ -313,12 +313,13 @@ def _extract_synth_struct(which: str = "all_valid"):
         from pyspark.sql import functions as F
 
         from chug_spark.config import ExtractJobCfg
-        from chug_spark.extract import extract_docread_flat
+        from chug_spark.extract import extract_docread, flatten_spans
         from chug_spark.synth import payload_corpus_from_documents
 
         docs = payload_corpus_from_documents(spark, sf_dir)
         cfg = ExtractJobCfg(page_sampling=which, render_dpi=24, max_pages_per_task=4)
-        flat, errors = extract_docread_flat(spark, docs, cfg)
+        spans_out, errors = extract_docread(spark, docs, cfg)
+        flat = flatten_spans(spans_out)
         ok = flat.select(
             "doc_id", "offset", "kind", "text",
             F.col("media_ref").isNotNull().alias("has_media"),

@@ -129,11 +129,8 @@ def main() -> int:
     pt_cfg = ExtractJobCfg(page_sampling="all_valid")
 
     def run_flagship():
-        # flat assembly path — what docread_flat / the driver query runs
-        from chug_spark.extract import extract_docread_flat
-
-        flat, _ = extract_docread_flat(spark, span_docs, pt_cfg)
-        return flat.count()
+        # the extraction tail docread_flat / the driver query runs
+        return flatten_spans(extract_docread(spark, span_docs, pt_cfg)[0]).count()
 
     # headline metric: min-of-3 — this VM's hypervisor-noise bursts span
     # multiple seconds, long enough to cover both of a min-of-2's runs

@@ -109,7 +109,6 @@ def write_with_checkpoint(
     out_dir: str,
     n_buckets: int = 8,
     fail_after: int | None = None,
-    stage_input: bool = True,
     single_pass: bool = False,
     bucket_engine: str = "xxhash64",
 ) -> None:
@@ -133,11 +132,10 @@ def write_with_checkpoint(
 
     Read-amplification contract (scale design):
 
-    - the input is STAGED once, written partitioned by bucket
-      (``stage_input=True``, default): each bucket iteration then scans only
-      its own partition via partition pruning — total input read = 2× (one
-      stage write + one partitioned read) instead of n_buckets× full scans
-      of a computed bucket column;
+    - the input is STAGED once, written partitioned by bucket: each bucket
+      iteration then scans only its own partition via partition pruning —
+      total input read = 2× (one stage write + one partitioned read) instead
+      of n_buckets× full scans of a computed bucket column;
     - per-bucket lineage metrics (doc/span/error counts) are computed from
       the parquet just written, never by re-running the extraction plan;
     - the staging dir is keyed by run_id — a resumed run reuses it (probed
@@ -165,17 +163,14 @@ def write_with_checkpoint(
     # a mid-stage crash must truncate the whole dir, not merge with leftover
     # partial partitions.
     staged_path = os.path.join(out_dir, f"staged_{cfg.run_id}")
-    if stage_input:
-        if not _fs_exists(spark, os.path.join(staged_path, "_SUCCESS")):
-            (
-                docs.withColumn("bucket", bucket_col(cfg.seed, n_buckets, bucket_engine))
-                .write.mode("overwrite")
-                .partitionBy("bucket")
-                .parquet(staged_path)
-            )
-        docs_b = spark.read.parquet(staged_path)
-    else:
-        docs_b = docs.withColumn("bucket", bucket_col(cfg.seed, n_buckets, bucket_engine))
+    if not _fs_exists(spark, os.path.join(staged_path, "_SUCCESS")):
+        (
+            docs.withColumn("bucket", bucket_col(cfg.seed, n_buckets, bucket_engine))
+            .write.mode("overwrite")
+            .partitionBy("bucket")
+            .parquet(staged_path)
+        )
+    docs_b = spark.read.parquet(staged_path)
 
     if single_pass:
         if fail_after is not None:
@@ -241,7 +236,7 @@ def write_with_checkpoint(
                 "append"
             ).parquet(cp_path)
             spark.catalog.clearCache()
-        if stage_input and _fs_exists(spark, staged_path):
+        if _fs_exists(spark, staged_path):
             _fs_delete(spark, staged_path)
         return
 
@@ -290,7 +285,7 @@ def write_with_checkpoint(
     # all buckets checkpointed done → the staged full-corpus copy has served
     # its purpose; delete it so a completed run leaves no 1×-corpus residue
     # (a crashed run keeps it for the resume — that's the 2×-read contract)
-    if stage_input and _fs_exists(spark, staged_path):
+    if _fs_exists(spark, staged_path):
         _fs_delete(spark, staged_path)
 
 

@@ -72,8 +72,8 @@ class ExtractJobCfg:
     doc_key: str = DEFAULT_DOC_KEY
     clean_text: bool = True                     # normalize raw text spans
 
-    # scale knobs (north rule: salted repartition + per-partition size capping)
-    salt_buckets: int = 0                       # 0 → default: shuffle partitions
+    # scale knobs (north rule: per-partition size capping; the decode
+    # repartition is salted over spark.sql.shuffle.partitions)
     max_pages_per_task: int = 8                 # cap: pages decoded per sub-row
     # corpus branch shape: 'auto' probes the data with two LIMIT-1 scans and
     # skips the absent subtree entirely (a homogeneous corpus pays one
@@ -82,30 +82,15 @@ class ExtractJobCfg:
     # table's shape is known, so set 'passthrough'/'payload'/'mixed'
     # explicitly and no probe job runs at all.
     branch: str = "auto"                        # 'auto'|'mixed'|'passthrough'|'payload'
-    # page-policy evaluator.  'udf' (default): the Arrow-vectorized pandas
-    # state machine over pruned inputs (doc_id, flags, 2 bools) — µs/row.
-    # 'sql' is a pure-Catalyst twin kept as an executable spec: higher-order
-    # folds are CodegenFallback (interpreted per lambda application), and
-    # the A/B measured them 1-2 orders of magnitude SLOWER per row than the
-    # Arrow UDF — the negative result that justifies the Python stage here
-    # (equivalence locked by test_policy_sql_equals_udf).
-    policy_engine: str = "udf"                  # 'udf'|'sql'
-    shuffle_partitions: Optional[int] = None
-    # persist the decode-UDF output: it feeds three branches (ok spans, error
-    # rows, bad-doc anti-join); caching renders each page exactly once.
-    # Disable for fully streaming single-branch consumers.
-    persist_intermediate: bool = True
 
     # checkpoint / resume
     run_id: str = "run0"
-    checkpoint_dir: Optional[str] = None
 
     def validate(self) -> "ExtractJobCfg":
         assert self.page_sampling in PAGE_SAMPLING_MODES, self.page_sampling
         assert self.error_handler in ERROR_POLICIES, self.error_handler
         assert self.max_pages_per_task >= 1
         assert self.branch in ("auto", "mixed", "passthrough", "payload"), self.branch
-        assert self.policy_engine in ("sql", "udf"), self.policy_engine
         return self
 
     def to_dict(self) -> dict:

@@ -33,9 +33,10 @@ from typing import Optional
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.storagelevel import StorageLevel
 
 from . import media as media_mod
 from .config import CONTINUE_POLICIES, VALID_PAGE_RETRIES, ExtractJobCfg
@@ -150,164 +151,6 @@ def _policy_udf(page_sampling: str, seed: int):
     # Filter conditions (where PythonUDF is unevaluable) and from duplicating
     # it across the ok/error branches via CollapseProject.
     return select_pages.asNondeterministic()
-
-
-def _policy_sql(page_sampling: str, seed: int):
-    """Pure-Catalyst twin of :func:`_policy_udf` — kept as an EXECUTABLE
-    SPEC, not the default engine.  The wraparound
-    ``get_next_valid_page_index`` scan (≤10 retries, KeyError on a missing
-    text key, RuntimeError on exhaustion) becomes a bounded aggregate fold,
-    and ``all_valid``'s n-step collection an outer fold over it; whole-row
-    equivalence to the pandas UDF is locked by
-    tests/test_extract_flat.py::test_policy_sql_equals_udf across all 5
-    policies on the adversarial corpus.
-
-    Measured negative result (r5): Spark evaluates higher-order lambdas via
-    CodegenFallback — interpreted per lambda application — so this nested
-    fold costs 1-2 orders of magnitude MORE per row than the Arrow-
-    vectorized pandas state machine over pruned inputs, even after a
-    substitution barrier stopped Catalyst from duplicating the fold (and
-    its from_json-derived inputs) across branches.  The policy stays a
-    pandas UDF by measurement, not assumption; flip cfg.policy_engine to
-    'sql' to reproduce.
-    """
-
-    def next_valid(flags, n, start):
-        # fold VALID_PAGE_RETRIES steps; acc = (done, idx, err, cur)
-        def stf(done, idx, err, cur):
-            return F.struct(
-                done.alias("done"), idx.cast("int").alias("idx"),
-                err.cast("string").alias("err"), cur.cast("int").alias("cur"),
-            )
-
-        init = stf(F.lit(False), F.lit(None), F.lit(None), start)
-
-        def step(acc, _):
-            cur2 = F.pmod(acc["cur"] + 1, n).cast("int")
-            fcur = F.element_at(flags, cur2 + 1)
-            return F.when(acc["done"], acc).otherwise(
-                F.when(fcur == _FLAG_MISSING,
-                       stf(F.lit(True), F.lit(None), F.lit("key"), cur2))
-                .when(fcur == _FLAG_VALID,
-                      stf(F.lit(True), cur2, F.lit(None), cur2))
-                .otherwise(stf(F.lit(False), F.lit(None), F.lit(None), cur2))
-            )
-
-        res = F.aggregate(
-            F.sequence(F.lit(1), F.lit(VALID_PAGE_RETRIES)), init, step
-        )
-        # not done after 10 steps == the reference's RuntimeError
-        return F.when(
-            res["done"],
-            F.struct(res["idx"].alias("idx"), res["err"].alias("err")),
-        ).otherwise(
-            F.struct(F.lit(None).cast("int").alias("idx"),
-                     F.lit("run").cast("string").alias("err"))
-        )
-
-    def apply(doc_id, flags, has_anno, has_media):
-        n = F.size(flags)
-
-        if page_sampling in ("first", "random"):
-            if page_sampling == "first":
-                start = F.lit(-1)
-            else:
-                # doc_rand_below(doc_id, seed, n, tag='page') - 1:
-                # incremental (a*16 + digit) % n fold over the first 16 md5
-                # hex chars == full-u64 % n (same fold as the DuckDB oracle)
-                h = F.md5(F.concat(doc_id, F.lit(f"|{seed}|page")))
-                pick = F.aggregate(
-                    F.sequence(F.lit(1), F.lit(16)),
-                    F.lit(0).cast("long"),
-                    lambda a, i: F.pmod(
-                        a * 16 + F.conv(F.substring(h, i, F.lit(1)), 16, 10).cast("long"),
-                        n.cast("long"),
-                    ),
-                )
-                start = (pick - 1).cast("int")
-            nv = next_valid(flags, n, start)
-            ind = F.when(nv["err"].isNull(), F.array(nv["idx"]))
-            # 'run' (exhausted retries) keeps ind null → no_valid_pages below,
-            # matching the UDF's `except RuntimeError: pass` with empty idx
-            perr = F.when(nv["err"] == "key", F.lit("key"))
-        elif page_sampling == "last":
-            missing = F.element_at(flags, n) == _FLAG_MISSING
-            ind = F.when(~missing, F.array((n - 1).cast("int")))
-            perr = F.when(missing, F.lit("key"))
-        elif page_sampling == "all":
-            firstbad = F.get(
-                F.filter(
-                    F.sequence(F.lit(0), n - 1),
-                    lambda i: F.element_at(flags, i + 1) != _FLAG_VALID,
-                ),
-                0,
-            )
-            ind = F.when(
-                firstbad.isNull(),
-                F.transform(F.sequence(F.lit(0), n - 1), lambda i: i.cast("int")),
-            )
-            perr = F.when(
-                F.element_at(flags, firstbad + 1) == _FLAG_MISSING, F.lit("key")
-            ).when(
-                F.element_at(flags, firstbad + 1) == _FLAG_INVALID,
-                F.lit("empty_page_in_all"),
-            )
-        elif page_sampling == "all_valid":
-            # outer fold: n next_valid scans, partial kept on exhaustion
-            def stf(cur, idx, done, keyerr):
-                return F.struct(
-                    cur.cast("int").alias("cur"), idx.alias("idx"),
-                    done.alias("done"), keyerr.alias("keyerr"),
-                )
-
-            init = stf(F.lit(-1), F.array().cast("array<int>"),
-                       F.lit(False), F.lit(False))
-
-            def step(acc, _):
-                nv = next_valid(flags, n, acc["cur"])
-                return F.when(acc["done"] | acc["keyerr"], acc).otherwise(
-                    F.when(nv["err"] == "key",
-                           stf(acc["cur"], acc["idx"], F.lit(True), F.lit(True)))
-                    .when(nv["err"] == "run",
-                          stf(acc["cur"], acc["idx"], F.lit(True), F.lit(False)))
-                    .otherwise(
-                        stf(nv["idx"], F.concat(acc["idx"], F.array(nv["idx"])),
-                            F.lit(False), F.lit(False))
-                    )
-                )
-
-            res = F.aggregate(F.sequence(F.lit(1), n), init, step)
-            ind = F.when(~res["keyerr"], res["idx"])
-            perr = F.when(res["keyerr"], F.lit("key"))
-        else:  # pragma: no cover - validate() rejects earlier
-            raise ValueError(page_sampling)
-
-        error = (
-            F.when(~has_anno, F.lit("no_annotation"))
-            .when(flags.isNull(), F.lit("anno_parse"))
-            .when(n == 0, F.lit("empty_annotation"))
-            .when(perr == "key", F.lit("missing_text_key"))
-            .when(perr.isNotNull(), perr)
-            # ind.isNull() first: size(NULL) is NULL under ANSI but -1 with
-            # spark.sql.ansi.enabled=false, so relying on size alone would
-            # silently pass retry-exhausted docs on non-ANSI sessions
-            .when(ind.isNull() | (F.size(ind) == 0), F.lit("no_valid_pages"))
-            .when(~has_media, F.lit("no_page_images"))
-        )
-        sel = F.struct(
-            F.when(error.isNull(), ind).alias("indices"),
-            error.alias("error"),
-        )
-        # Substitution barrier — the same role as the pandas UDF's
-        # asNondeterministic(): the value IS deterministic (rand(seed) > -1
-        # is always true), but the nondeterministic marker stops Catalyst
-        # from inlining this non-cheap fold into Filter conditions and
-        # duplicating it (together with its from_json-derived inputs) across
-        # the ok/error branches — measured as a >10x interpreted-eval blowup
-        # without it.
-        return F.when(F.rand(0) > -1.0, sel).otherwise(sel)
-
-    return apply
 
 
 def _decode_udf(image_mode: str, render_dpi: int, max_pages: int):
@@ -463,10 +306,10 @@ def _finish_items(items):
 def _extract_core(
     spark: SparkSession, docs: DataFrame, cfg: ExtractJobCfg
 ):
-    """Shared front of the extraction pipeline: branch probe + split,
+    """Front of the extraction pipeline: branch probe + split,
     per-branch derivation + page-sampling policy, payload chunking + decode
     UDF.  Returns ``(pt_ok, pl_ok, policy_errors, decoded_ok,
-    decode_errors)``; the nested/flat assembly tails diverge from here.
+    decode_errors)``; :func:`extract_docread` assembles the spans from these.
     """
     # ---- cheap branch probe BEFORE any heavy work -------------------------
     # payload vs passthrough is decided from the first media span's ref
@@ -512,26 +355,14 @@ def _extract_core(
     pt_in = gated.filter(~_probe) if branch in ("mixed", "passthrough") else None
     pl_in = gated.filter(_probe) if branch in ("mixed", "payload") else None
 
-    if cfg.policy_engine == "sql":
-        policy_col = _policy_sql(cfg.page_sampling, cfg.seed)
-        select_pages = None
-    else:
-        policy_col = None
-        select_pages = _policy_udf(cfg.page_sampling, cfg.seed)
+    select_pages = _policy_udf(cfg.page_sampling, cfg.seed)
 
     def prepared(branch_docs: DataFrame) -> tuple[DataFrame, DataFrame]:
         """heavy derivation + page policy over one branch; returns (ok, errors)"""
         df = _prepare(branch_docs, cfg)
-        sel = (
-            policy_col(
-                F.col("doc_id"), F.col("flags"),
-                F.col("anno_txt").isNotNull(), F.col("n_media") > 0,
-            )
-            if policy_col is not None
-            else select_pages(
-                F.col("doc_id"), F.col("flags"),
-                F.col("anno_txt").isNotNull(), F.col("n_media") > 0,
-            )
+        sel = select_pages(
+            F.col("doc_id"), F.col("flags"),
+            F.col("anno_txt").isNotNull(), F.col("n_media") > 0,
         )
         df = df.withColumn("sel", sel).select(
             "doc_id", "text_spans", "anchor", "first_media", "media_refs",
@@ -566,7 +397,7 @@ def _extract_core(
 
     # ---------------- payload branch: cap -> salt -> decode UDF --------------
     k = cfg.max_pages_per_task
-    n_parts = cfg.salt_buckets or int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     payload_rows = (
         pl_ok
         .select(
@@ -595,12 +426,9 @@ def _extract_core(
     )
     decode_fn, decode_schema = _decode_udf(cfg.image_mode, cfg.render_dpi, k)
     decoded = payload_rows.mapInPandas(decode_fn, schema=decode_schema)
-    # consumed by three branches (ok rows, error rows, bad-doc anti-join):
+    # consumed three times (ok rows, __error__ markers, errors side-output):
     # never render a page more than once
-    if cfg.persist_intermediate:
-        from pyspark.storagelevel import StorageLevel
-
-        decoded = decoded.persist(StorageLevel.MEMORY_AND_DISK)
+    decoded = decoded.persist(StorageLevel.MEMORY_AND_DISK)
     decode_errors = decoded.filter(F.col("error").isNotNull()).select(
         "doc_id", F.lit("media").alias("stage"), F.col("error").alias("error")
     )
@@ -608,31 +436,51 @@ def _extract_core(
     return pt_ok, pl_ok, policy_errors, decoded_ok, decode_errors
 
 
-def _payload_items(
+def extract_docread(
+    spark: SparkSession, docs: DataFrame, cfg: Optional[ExtractJobCfg] = None
+) -> tuple[DataFrame, DataFrame]:
+    """Run doc-read extraction.  Returns ``(spans_out, errors)``:
+
+    - ``spans_out``: nested ``(doc_id, spans)`` with the output span contract —
+      per selected page k: a text span (lines joined by cfg.line_break,
+      doc_read_processor.py:121) then its paired media span, anchored at the
+      annotation's input position; raw input text spans pass through
+      (cleaned) at their own positions; offsets renumbered densely 0..n-1.
+    - ``errors``: (doc_id, stage, error) lineage rows for skipped documents
+      (continue-policy analogue of wds/helpers.py:41-68).
+
+    Documents that error at any stage contribute *no* output spans (the
+    reference's whole-sample skip).  Flat consumers take
+    ``flatten_spans(spans_out)``.
+    """
+    cfg = (cfg or ExtractJobCfg()).validate()
+    pt_ok, pl_ok, policy_errors, decoded_ok, decode_errors = _extract_core(
+        spark, docs, cfg
+    )
+    if pl_ok is None:
+        return _passthrough_nested(pt_ok, cfg), policy_errors
+    payload_nested = _payload_nested(pl_ok, decoded_ok, decode_errors, cfg)
+    errors = policy_errors.unionByName(decode_errors)
+    if pt_ok is None:
+        return payload_nested, errors
+    return _passthrough_nested(pt_ok, cfg).unionByName(payload_nested), errors
+
+
+def _payload_nested(
     pl_ok: DataFrame, decoded_ok: DataFrame, decode_errors: DataFrame, cfg: ExtractJobCfg
 ) -> DataFrame:
-    """span item rows + one ``__error__`` marker row per decode-error chunk.
+    """payload assembly: decode rows + raw input spans -> span items ->
+    regroup per doc.
 
-    The marker rides the SAME doc_id shuffle the reassembly needs anyway, so
-    the whole-sample skip (a doc with any decode error contributes nothing)
-    is a window/aggregate predicate instead of a ``broadcast(bad_docs)``
-    anti-join — which both forced a full decode pass to finish before the
-    main stage could start AND broadcast a set whose size scales with the
-    error count (unbounded at 10^12 docs)."""
-    marks = decode_errors.select(
-        "doc_id",
-        F.lit(-1).alias("anchor"),
-        F.lit(-1).alias("sub"),
-        F.lit("__error__").alias("kind"),
-        F.lit(None).cast("string").alias("text"),
-        F.lit(None).cast("string").alias("media_ref"),
-    )
-    return _payload_span_rows(pl_ok, decoded_ok, cfg).unionByName(marks)
-
-
-def _payload_span_rows(pl_ok: DataFrame, decoded_ok: DataFrame, cfg: ExtractJobCfg) -> DataFrame:
-    """decode rows + raw input spans -> flat (doc_id, anchor, sub, kind,
-    text, media_ref) item rows for the payload branch."""
+    Dense offset renumbering + nesting happen in ONE shuffle; span order is
+    restored by sort keys, never by collect_list order (SURVEY.md §7.4.3).
+    Each decode-error chunk adds one ``__error__`` marker item that rides
+    the SAME doc_id shuffle, so the whole-sample skip (a doc with any decode
+    error contributes nothing) is an exists-predicate on the grouped array
+    instead of a ``broadcast(bad_docs)`` anti-join — which both forced a
+    full decode pass to finish before the main stage could start AND
+    broadcast a set whose size scales with the error count (unbounded at
+    10^12 docs)."""
     page_spans = decoded_ok.select(
         "doc_id",
         F.explode(
@@ -654,51 +502,22 @@ def _payload_span_rows(pl_ok: DataFrame, decoded_ok: DataFrame, cfg: ExtractJobC
             )
         ).alias("s"),
     ).select("doc_id", "s.*")
-
     raw_spans = (
         pl_ok
         .select("doc_id", F.explode(_raw_items(F.col("text_spans"), cfg)).alias("s"))
         .select("doc_id", "s.*")
     )
-    return page_spans.unionByName(raw_spans)
-
-
-def extract_docread(
-    spark: SparkSession, docs: DataFrame, cfg: Optional[ExtractJobCfg] = None
-) -> tuple[DataFrame, DataFrame]:
-    """Run doc-read extraction.  Returns ``(spans_out, errors)``:
-
-    - ``spans_out``: nested ``(doc_id, spans)`` with the output span contract —
-      per selected page k: a text span (lines joined by cfg.line_break,
-      doc_read_processor.py:121) then its paired media span, anchored at the
-      annotation's input position; raw input text spans pass through
-      (cleaned) at their own positions; offsets renumbered densely 0..n-1.
-    - ``errors``: (doc_id, stage, error) lineage rows for skipped documents
-      (continue-policy analogue of wds/helpers.py:41-68).
-
-    Documents that error at any stage contribute *no* output spans (the
-    reference's whole-sample skip).
-
-    For a flat consumer, :func:`extract_docread_flat` produces
-    ``flatten_spans``-identical rows without building the per-doc arrays.
-    """
-    cfg = (cfg or ExtractJobCfg()).validate()
-    pt_ok, pl_ok, policy_errors, decoded_ok, decode_errors = _extract_core(
-        spark, docs, cfg
+    marks = decode_errors.select(
+        "doc_id",
+        F.lit(-1).alias("anchor"),
+        F.lit(-1).alias("sub"),
+        F.lit("__error__").alias("kind"),
+        F.lit(None).cast("string").alias("text"),
+        F.lit(None).cast("string").alias("media_ref"),
     )
-    if pl_ok is None:
-        return _passthrough_nested(pt_ok, cfg), policy_errors
-
-    # ---------------- payload assembly: decode rows -> span items -> regroup -
-    all_items = _payload_items(pl_ok, decoded_ok, decode_errors, cfg)
-    errors = policy_errors.unionByName(decode_errors)
-
-    # dense offset renumbering + nesting in ONE shuffle; span order restored
-    # by sort keys, never by collect_list order (SURVEY.md §7.4.3).  The
-    # whole-sample skip is the exists-marker predicate on the grouped array —
-    # same shuffle, no broadcast (see _payload_items).
-    payload_nested = (
-        all_items.groupBy("doc_id")
+    return (
+        page_spans.unionByName(raw_spans).unionByName(marks)
+        .groupBy("doc_id")
         .agg(
             F.collect_list(
                 F.struct("anchor", "sub", "kind", "text", "media_ref")
@@ -707,9 +526,6 @@ def extract_docread(
         .filter(~F.exists("items", lambda s: s["kind"] == F.lit("__error__")))
         .select("doc_id", _finish_items(F.col("items")).alias("spans"))
     )
-    if pt_ok is None:
-        return payload_nested, errors
-    return _passthrough_nested(pt_ok, cfg).unionByName(payload_nested), errors
 
 
 def _passthrough_nested(pt_ok: DataFrame, cfg: ExtractJobCfg) -> DataFrame:
@@ -746,108 +562,6 @@ def _passthrough_nested(pt_ok: DataFrame, cfg: ExtractJobCfg) -> DataFrame:
             F.concat(_raw_items(F.col("text_spans"), cfg), pt_page_items)
         ).alias("spans"),
     )
-
-
-def extract_docread_flat(
-    spark: SparkSession, docs: DataFrame, cfg: Optional[ExtractJobCfg] = None
-) -> tuple[DataFrame, DataFrame]:
-    """Doc-read extraction emitting flat (doc_id, offset, kind, text,
-    media_ref) rows directly — value-identical to
-    ``flatten_spans(extract_docread(...))`` (locked by a pytest exceptAll
-    equivalence test + the driver oracle), but the passthrough branch never
-    builds or sorts a per-doc span array: dense offsets are computed
-    analytically and the page items come out of ONE codegen explode.
-
-    Why: the nested assembly's array_sort/transform lambdas evaluate
-    interpreted per element (ROUND3.md codegen-vs-HOF lesson); for flat
-    consumers (the flagship query, any columnar sink) that work is pure
-    overhead.  Passthrough stays zero-shuffle; the payload branch replaces
-    groupBy+collect_list+array_sort with a window rank over the same single
-    shuffle.
-
-    Offset derivation (passthrough): output order is (anchor, sub) where raw
-    text spans carry their own input offset as anchor and all 2K page items
-    share the annotation's anchor.  ``text_spans`` is offset-sorted, so the
-    i-th raw span has exactly i raw predecessors, plus the 2K page items iff
-    its anchor exceeds the annotation's; a page item at position m has
-    R_a + m predecessors, R_a = #raw spans before the annotation.
-    """
-    cfg = (cfg or ExtractJobCfg()).validate()
-    pt_ok, pl_ok, policy_errors, decoded_ok, decode_errors = _extract_core(
-        spark, docs, cfg
-    )
-    if pl_ok is None:
-        return _passthrough_flat(pt_ok, cfg), policy_errors
-
-    all_items = _payload_items(pl_ok, decoded_ok, decode_errors, cfg)
-    errors = policy_errors.unionByName(decode_errors)
-    # whole-sample skip as a window predicate on the SAME doc_id shuffle the
-    # row_number needs (unordered max + ordered row_number share one
-    # Exchange); no broadcast, no pre-pass (see _payload_items)
-    w_doc = Window.partitionBy("doc_id")
-    w = Window.partitionBy("doc_id").orderBy("anchor", "sub")
-    payload_flat = (
-        all_items.withColumn(
-            "_bad",
-            F.max(F.when(F.col("kind") == "__error__", 1).otherwise(0)).over(w_doc),
-        )
-        # _bad == 0 alone is the whole-sample skip: a doc containing any
-        # __error__ marker has _bad = 1 on EVERY row, markers included
-        .filter(F.col("_bad") == 0)
-        .select(
-            "doc_id",
-            (F.row_number().over(w) - 1).cast("int").alias("offset"),
-            "kind", "text", "media_ref",
-        )
-    )
-    if pt_ok is None:
-        return payload_flat, errors
-    return _passthrough_flat(pt_ok, cfg).unionByName(payload_flat), errors
-
-
-def _passthrough_flat(pt_ok: DataFrame, cfg: ExtractJobCfg) -> DataFrame:
-    # ONE generator for both raw and page rows: pt_ok's subtree (scan +
-    # derivation + policy UDF) must evaluate exactly once — a raw/page
-    # union of two selects over pt_ok would run it twice, incl. the Python
-    # policy UDF.  Row m of sequence(0, n_raw + 2K - 1) is raw span #m when
-    # m < n_raw, else page item #(m - n_raw); every downstream expression is
-    # codegen (element_at / when / pmod), no array is built or sorted.
-    n_raw = F.size("text_spans")
-    k2 = (F.size("indices") * 2).alias("k2")
-    pt = pt_ok.select(
-        "doc_id", "anchor", "media_refs", "n_media", "indices", "sel_texts",
-        "text_spans", k2,
-        F.size(
-            F.filter("text_spans", lambda t: t["offset"] < F.col("anchor"))
-        ).alias("ra"),
-        F.explode(F.sequence(F.lit(0), n_raw + F.size("indices") * 2 - 1)).alias("m"),
-    )
-    m = F.col("m")
-    is_raw = m < F.size("text_spans")
-    t = F.get("text_spans", m)
-    p = m - F.size("text_spans")
-    j = (p / 2).cast("int")
-    is_page_text = p % 2 == 0
-    raw_text = clean_text(t["text"]) if cfg.clean_text else t["text"]
-    pt_flat = pt.select(
-        "doc_id",
-        F.when(
-            is_raw,
-            m + F.when(t["offset"] > F.col("anchor"), F.col("k2")).otherwise(F.lit(0)),
-        ).otherwise(F.col("ra") + p).cast("int").alias("offset"),
-        F.when(is_raw | is_page_text, F.lit("text"))
-        .otherwise(F.lit("media")).alias("kind"),
-        F.when(is_raw, raw_text)
-        .when(is_page_text, F.get("sel_texts", j)).alias("text"),
-        F.when(
-            ~is_raw & ~is_page_text,
-            F.get(
-                "media_refs",
-                F.pmod(F.get("indices", j), F.col("n_media")).cast("int"),
-            ),
-        ).alias("media_ref"),
-    )
-    return pt_flat
 
 
 def flatten_spans(spans_out: DataFrame) -> DataFrame:

@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from .config import ExtractJobCfg
-from .extract import extract_docread_flat
+from .extract import extract_docread, flatten_spans
 from .synth import spans_from_documents
 
 
@@ -15,9 +15,8 @@ def docread_flat(
     spark: SparkSession, sf_dir: str, page_sampling: str = "all_valid", seed: int = 0
 ) -> DataFrame:
     """Derived span corpus → doc-read extraction → flat span rows
-    (doc_id, offset, kind, text, media_ref).  Uses the flat assembly path
-    (extract_docread_flat): value-identical to the nested pipeline but with
-    no per-doc array build/sort — codegen end-to-end on passthrough docs."""
+    (doc_id, offset, kind, text, media_ref) — the same extract_docread →
+    flatten_spans tail the production writers run."""
     # Materialize the derived corpus before extraction (lazy localCheckpoint,
     # re-computed on every invocation — nothing persists across query
     # builds): fusing the span construction into the extraction stage made
@@ -27,7 +26,7 @@ def docread_flat(
     # parquet-backed bench leg measures the same machinery at 1.3 s).  The
     # trade is one bounded materialization of the DERIVED corpus — this
     # wiring is the synthetic-corpus scaffold; production extraction reads
-    # a stored span table and takes extract_docread_flat directly.
+    # a stored span table and extracts from it directly.
     docs = spans_from_documents(spark, sf_dir).localCheckpoint(eager=False)
     # the derived corpus is passthrough BY CONSTRUCTION (media_refs are md5
     # hex, never the synth:// payload prefix) — declare the known shape so
@@ -35,5 +34,4 @@ def docread_flat(
     # (the documented production mode for known-shape tables; the 'auto'
     # payload probe scanned the whole derivation to find zero payload rows)
     cfg = ExtractJobCfg(page_sampling=page_sampling, seed=seed, branch="passthrough")
-    flat, _errors = extract_docread_flat(spark, docs, cfg)
-    return flat
+    return flatten_spans(extract_docread(spark, docs, cfg)[0])

@@ -286,8 +286,7 @@ def html_to_spans(
     columns — the same explode-over-HOF rewrite as the shingle pipeline
     (interpreted per-element lambdas measured 2.3× slower here, bit-identical
     output); dense per-doc offsets come from one row_number window, i.e. ONE
-    keyed shuffle whose volume is the output span stream itself — the same
-    single-shuffle shape as the flagship's flat assembly.
+    keyed shuffle whose volume is the output span stream itself.
     """
     pieces = _html_pieces(F.col(html_col))
     b = F.col("_b")

@@ -330,8 +330,8 @@ def spans_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     spans = F.concat(F.array(anno_span), media_spans)
-    # Nondeterminism guard (the extract.py _policy_sql trick; optimization
-    # guide §4.4 generalized to plan-level expressions): the value IS
+    # Nondeterminism guard (the plan-level twin of the policy UDF's
+    # asNondeterministic() in extract.py; optimization guide §4.4): the value IS
     # deterministic (rand(0) > -1 is always true), but marking it stops the
     # optimizer substituting this whole construction into pushed-down
     # filters and collapsed projections downstream — measured: the in-flight

@@ -29,6 +29,8 @@ SUBSET = [
     "docread_all_valid",
     "docread_random",
     "docread_all",
+    "docread_first",
+    "docread_last",
     "spans_derive",
     "extract_synth_struct",
     "safe_map",

@@ -254,3 +254,39 @@ def test_last_policy_edge_semantics(spark):
     assert ("missing_last", "anno", "missing_text_key") in errs
     # literal index n-1 wraps over the media list: 4 % 2 = 0
     assert got["wraps"][1] == ("media", None, "page:wraps:0", 1)
+
+
+@pytest.mark.parametrize("shape", ["mixed_corpus", "pure_passthrough"])
+def test_branch_modes_equivalent(spark, shape):
+    """cfg.branch='auto' (LIMIT-1 probes) must produce the same rows as the
+    explicitly declared shape AND as the always-both 'mixed' plan — on a
+    mixed corpus and on a pure-passthrough corpus (where 'auto' skips the
+    whole payload subtree)."""
+    from chug_spark.synth import spans_from_documents
+
+    if shape == "mixed_corpus":
+        docs = generate_docs(spark, n_docs=60, seed=21)
+        declared = "mixed"
+    else:
+        docs = spans_from_documents(spark, "/root/testdata/sf0.001")
+        declared = "passthrough"
+
+    outs = {}
+    for branch in ("auto", declared, "mixed"):
+        cfg = ExtractJobCfg(page_sampling="all_valid", render_dpi=16, branch=branch)
+        outs[branch] = flatten_spans(extract_docread(spark, docs, cfg)[0])
+    for other in (declared, "mixed"):
+        assert outs["auto"].exceptAll(outs[other]).count() == 0
+        assert outs[other].exceptAll(outs["auto"]).count() == 0
+
+
+def test_branch_declared_wrong_shape_is_explicit(spark):
+    """Declaring 'payload' on a passthrough-only corpus yields no rows (the
+    declared branch filters everything) — a knowable, documented contract
+    rather than silent wrong answers: the probe mode exists for unknown
+    shapes."""
+    from chug_spark.synth import spans_from_documents
+
+    docs = spans_from_documents(spark, "/root/testdata/sf0.001")
+    cfg = ExtractJobCfg(page_sampling="all_valid", branch="payload")
+    assert flatten_spans(extract_docread(spark, docs, cfg)[0]).count() == 0

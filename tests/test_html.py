@@ -213,9 +213,8 @@ def test_html_source_scheme_feeds_extraction(spark, tmp_path):
 
 
 def test_html_to_spans_single_shuffle(spark):
-    """Explode + codegen scoring + ONE keyed shuffle for the dense offsets
-    (the flagship's flat-assembly shape); never a cartesian or a second
-    exchange."""
+    """Explode + codegen scoring + ONE keyed shuffle for the dense offsets;
+    never a cartesian or a second exchange."""
     docs = spark.createDataFrame(
         [(i, f"<p>block {i} with enough characters to keep</p>"
              f"<img src='m/{i}.png'>") for i in range(20)],

@@ -25,11 +25,11 @@ def span_parquet(spark, tmp_path_factory):
 
 def test_exchange_and_udf_budget(spark, span_parquet):
     """Shuffle/Python-eval canary: the plan's *unique* exchanges must stay at
-    the designed set (payload repartition, payload groupBy, anti-join
-    distinct + broadcasts) and the policy UDF must not multiply back into a
-    per-branch diamond (regression guard for the 5-subtree plan this
-    replaced).  Textual counts over-count reused subtrees, so unique plan_ids
-    are counted for exchanges."""
+    the designed set (the payload salted repartition and the payload groupBy
+    reassembly, which also carries the ``__error__`` markers) and the policy
+    UDF must not multiply back into a per-branch diamond (regression guard
+    for the 5-subtree plan this replaced).  Textual counts over-count reused
+    subtrees, so unique plan_ids are counted for exchanges."""
     import re
 
     docs = spark.read.parquet(span_parquet)
@@ -43,6 +43,19 @@ def test_exchange_and_udf_budget(spark, span_parquet):
     assert plan.count("ArrowEval") <= 6, plan
     # decode output is cached (rendered once, consumed by 3 branches)
     assert "InMemoryTableScan" in plan, plan
+
+
+def test_passthrough_plans_zero_exchange(spark, tmp_path):
+    """A pure-passthrough corpus ('auto' resolves it with the LIMIT-1
+    probes) is assembled per row with no shuffle at all: the flat span
+    output plans with zero Exchange nodes."""
+    path = str(tmp_path / "documents")
+    rows = [make_doc(i, seed=41, payload_every=0) for i in range(40)]
+    spark.createDataFrame(rows, DOCUMENTS_SCHEMA).write.parquet(path)
+    docs = spark.read.parquet(path)
+    spans_out, _ = extract_docread(spark, docs, ExtractJobCfg(branch="auto"))
+    plan = _phys(flatten_spans(spans_out))
+    assert "Exchange" not in plan, plan
 
 
 def test_flat_filter_pushdown_to_scan(spark, span_parquet):

@@ -158,7 +158,7 @@ def test_tar_scheme_feeds_extraction_end_to_end(spark, tmp_path):
     import json
 
     from chug_spark.config import ExtractJobCfg
-    from chug_spark.extract import extract_docread_flat
+    from chug_spark.extract import extract_docread, flatten_spans
     from chug_spark.sources.registry import read_source
 
     samples = []
@@ -173,8 +173,8 @@ def test_tar_scheme_feeds_extraction_end_to_end(spark, tmp_path):
     write_tar_shards(samples, str(tmp_path), n_shards=2)
     docs = read_source(spark, f"tar://{tmp_path}/*.tar")
     assert docs.columns == ["doc_id", "spans"]
-    flat, errors = extract_docread_flat(spark, docs, ExtractJobCfg(page_sampling="all_valid"))
-    rows = flat.collect()
+    spans_out, errors = extract_docread(spark, docs, ExtractJobCfg(page_sampling="all_valid"))
+    rows = flatten_spans(spans_out).collect()
     assert errors.count() == 0
     assert len(rows) == 12 * 2 * 2  # 12 docs x 2 pages x (text+media)
     texts = {r.text for r in rows if r.kind == "text"}
