@@ -94,12 +94,7 @@ def moment_matrix(
     (i int, j int, g long) with i <= j and only nonzero entries — exact
     integer moments, independent of partitioning and row order.
     """
-    from .dataflow import spread_small_scan
-
     aug = dim + 2
-    # spread tiny scans: the per-token feature hashing + per-partition
-    # G-accumulation must run on every core (guide §2.5); no-op at scale
-    docs = spread_small_scan(docs)
     feat = docs.filter(F.col(text_col).isNotNull()).select(
         hashed_dims(F.col(text_col), dim).alias("dims"),
         label.cast("int").alias("y"),

@@ -5,71 +5,10 @@ SURVEY.md X1/X5/X6."""
 
 from __future__ import annotations
 
-import os
 from typing import Optional
-from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def spread_small_scan(df: DataFrame, key: Optional[str] = None) -> DataFrame:
-    """Scale-adaptive scan spreading (optimization guide §2.5 "input skew").
-
-    A tiny file-backed input (one file, one parquet row group) plans into
-    1-2 scan partitions, so every per-row expression upstream of the first
-    exchange — md5-per-word hashing, shingle explodes, JSON assembly, a
-    mapInPandas kernel — runs on 1-2 cores no matter how many the cluster
-    has.  When the WHOLE input is provably small (local files totalling
-    under ``spark.chug.spread.maxBytes``, default 256 MB) and supplies
-    fewer files than cores, repartition it across the cluster: the one-off
-    exchange moves < maxBytes once and buys every downstream map stage full
-    parallelism.
-
-    At warehouse scale the guard makes this a no-op: >= cores input files,
-    non-local URIs (object stores), unknown sizes, or anything over the
-    byte ceiling all pass through untouched — plans over real tables are
-    identical with and without this call.  Purely a physical-layout change:
-    row values are untouched, so any order-insensitive consumer (every
-    declared query) is value-identical.
-
-    There is also a FLOOR (``spark.chug.spread.minBytes``, default 4 MB):
-    the spread pays a fixed exchange + extra-stage-scheduling cost
-    (A/B-measured ~1-2 s across the suite), and below a few MB of input
-    the serial map work it parallelizes is cheaper than that — measured
-    at the driver's sf0.1 (1.7 MB corpus): quality moments 0.64 s unspread
-    vs 1.82 s spread, while the same op at sf1.0 (5.9 MB) inverts.
-
-    ``key=None`` round-robins; ``key='doc_id'`` hash-partitions on that
-    column so a downstream groupBy/window keyed the same way reuses the
-    exchange instead of adding its own (guide §2.4).
-    """
-    try:
-        sess = df.sparkSession
-        cores = sess.sparkContext.defaultParallelism
-        files = df.inputFiles()
-        if not files or len(files) >= cores:
-            return df
-        max_bytes = int(
-            sess.conf.get("spark.chug.spread.maxBytes", str(256 * 1024 * 1024))
-        )
-        min_bytes = int(
-            sess.conf.get("spark.chug.spread.minBytes", str(4 * 1024 * 1024))
-        )
-        total = 0
-        for uri in files:
-            p = urlparse(uri)
-            if p.scheme not in ("file", ""):
-                return df
-            total += os.path.getsize(unquote(p.path))
-            if total >= max_bytes:
-                return df
-        if total < min_bytes:
-            return df
-    except Exception:  # listing/stat failed -> assume big, change nothing
-        return df
-    n = cores * 2  # match the default shuffle-partition fan-out (tail balance)
-    return df.repartition(n, F.col(key)) if key else df.repartition(n)
 
 
 def shuffle_hash(seed: int = 0, interval: int = 0, key: str = "doc_id",
@@ -142,13 +81,6 @@ def det_shuffle_plan(df: DataFrame, seed: int = 0, interval: int = 0,
         .withColumn("shuffle_key", F.col("_h"))
         .drop("_h")
     )
-
-
-def split_by_worker(df: DataFrame, num_partitions: int) -> DataFrame:
-    """Explicit control over input-split fan-out (the analogue of
-    split_by_node/split_by_worker, wds/pipeline.py:78-82 — Spark's scheduler
-    does this natively; exposed for tests/bench symmetry)."""
-    return df.repartition(num_partitions)
 
 
 def stratified_sample(

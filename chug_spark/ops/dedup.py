@@ -120,14 +120,7 @@ def minhash_signatures(docs: DataFrame, bands: int = 8, shingle_n: int = 3) -> D
     needed — signatures are bit-identical to the per-doc-distinct HOF
     formulation (verified by exceptAll both ways).  The single-md5 +
     integer-permutation scheme still replaces ``bands`` md5 passes."""
-    from .dataflow import spread_small_scan
-
     consts = minhash_perm_constants(bands)
-    # tiny single-file corpora plan into 1-2 scan splits; hash-spread by
-    # doc_id so the shingle explode + md5 run on every core and the
-    # groupBy(doc_id) below reuses the exchange (guide §2.4/§2.5); no-op
-    # for real multi-file tables
-    docs = spread_small_scan(docs, key="doc_id")
     words = F.split(F.col("text"), " ")
     grams = (
         docs.select(F.col("doc_id").cast("long").alias("doc_id"), words.alias("w"))
@@ -189,7 +182,7 @@ def bucket_pairs(
     pairs sharing a bucket key, one output row per (bucket, pair).
 
     Physical strategy (A/B-measured 20% faster than the capped self-join at
-    sf0.1, tools/ab_ngram.py): window-cap first (streaming — memory-safe on
+    sf0.1, ROUND3.md): window-cap first (streaming — memory-safe on
     arbitrarily hot keys), then collect the ≤cap survivors of each bucket
     into one sorted array and expand the C(n,2) pairs with higher-order
     functions — no join at all, and the groupBy reuses the window's hash
@@ -252,13 +245,7 @@ def simhash_signatures(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
 
     16-bit signatures (round 1) are useless at 10^12 docs — 65k distinct
     values; 64 bits keep collision-by-chance negligible at corpus scale."""
-    from .dataflow import spread_small_scan
-
     assert bits == SIMHASH_BITS, "contract is fixed at 64 bits"
-    # spread tiny scans: the word explode + per-word md5 is the cost here
-    # and must not run on 1-2 cores (guide §2.5); groupBy(doc_id) reuses
-    # the spread's hash partitioning (guide §2.4)
-    docs = spread_small_scan(docs, key="doc_id")
     base = docs.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.explode(F.split(F.col("text"), " ")).alias("w"),
@@ -619,12 +606,7 @@ def ngram_jaccard_pairs(
     interpreted ``word_shingles`` HOF — which the old formulation also
     evaluated twice (once for sizes, once for the explode).  Set sizes
     derive from the same exploded rows, so values are identical."""
-    from .dataflow import spread_small_scan
-
     words = F.split(F.col("text"), " ")
-    # spread tiny scans before the shingle explode (guide §2.5); doc_id
-    # hash partitioning also serves the distinct and the per-doc size agg
-    docs = spread_small_scan(docs, key="doc_id")
     exploded = (
         docs.select(F.col("doc_id").cast("long").alias("doc_id"), words.alias("w"))
         .filter(F.size("w") >= shingle_n)
@@ -969,11 +951,6 @@ def line_dedup_keep_first(docs: DataFrame, line_words: int = 8) -> DataFrame:
     text is NULL or empty carry no lines and drop out (dedup output is
     content-bearing docs).
     """
-    from .dataflow import spread_small_scan
-
-    # spread tiny scans before the line explode (guide §2.5); the doc_id
-    # hash partitioning is reused by the per-doc reassembly aggregation
-    docs = spread_small_scan(docs, key="doc_id")
     norm = normalize_text(F.col("text"))
     words = F.split(norm, " ")
     n_lines = F.ceil(F.size(words) / F.lit(line_words)).cast("int")

@@ -64,14 +64,7 @@ def doc_gram_counts(
     token-free texts drop out: they carry no n-gram mass on either side
     of the ratio, matching the paper's bag-of-ngrams model.
     """
-    from .dataflow import spread_small_scan
-
     toks = F.filter(F.split(_norm(F.col(text_col)), " "), lambda t: t != "")
-    # spread tiny scans: per-gram md5 hashing is the dominant cost and must
-    # use every core (guide §2.5); the doc_id hash partitioning is reused
-    # by BOTH keyed aggregations downstream (per-doc gram counts here and
-    # the per-doc score in dsir_scores), eliding their exchanges entirely
-    docs = spread_small_scan(docs, key="doc_id")
     staged = docs.filter(F.col(text_col).isNotNull()).select(
         F.col("doc_id").cast("long").alias("doc_id"),
         target.cast("int").alias("is_target"),
@@ -114,13 +107,10 @@ def dsir_scores(
     The (doc, bucket, c) relation feeds BOTH the ratio estimation and the
     scoring join, so the gram pipeline evaluates twice (column pruning
     makes the two subtrees non-identical, so exchange reuse never fires).
-    r6 A/B at the driver's sf1.0: with the scan spread across all cores the
-    second evaluation costs LESS than materializing the ≤dim-rows-per-doc
-    relation through localCheckpoint (2.8 s checkpointed vs 1.9 s re-run —
-    the r5 checkpoint predates the spread, when one serial evaluation was
-    the whole cost).  Scans also scale horizontally at 100 TB, while a
-    checkpoint of a per-doc relation is local-disk pressure; a multi-job
-    production pipeline would write the grams to a scratch TABLE once.
+    It is re-evaluated rather than localCheckpoint-ed: a scan scales
+    horizontally, while a checkpoint of a per-doc relation puts pressure on
+    local disk; a multi-job production pipeline would write the grams to a
+    scratch TABLE once.
     """
     gc = doc_gram_counts(docs, target, text_col, dim)
     dist = gc.groupBy("bucket").agg(

@@ -9,25 +9,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 
-def _docs(spark, sf_dir, spread=True):
-    # spread_small_scan: a single-file corpus plans into 1-2 scan splits, so
-    # without this every per-row expression before the first exchange runs
-    # on 1-2 cores (measured: the whole bench suite was map-bound on a
-    # 2-split scan at the driver's sf1.0).  No-op for real multi-file tables.
-    # Call sites whose first real operator is an exchange anyway (or that
-    # repartition internally) pass spread=False: for them the extra
-    # round-robin exchange is pure overhead (A/B-measured regressions on
-    # media_dhash / seq_pack / snapshot_dedup).
-    from .dataflow import spread_small_scan
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return spread_small_scan(d) if spread else d
-
-
-def _emb(spark, sf_dir):
-    from .dataflow import spread_small_scan
-
-    return spread_small_scan(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
+def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
 #: Explicit events schema.  ``ts`` is stored as parquet timestamp[us] with
@@ -269,7 +252,8 @@ WHERE CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter) >= 0.12
 def q_cosine_threshold(spark, sf_dir):
     from .similarity import cosine_pairs_threshold
 
-    return cosine_pairs_threshold(_emb(spark, sf_dir), n_queries=5, threshold=0.2)
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    return cosine_pairs_threshold(emb, n_queries=5, threshold=0.2)
 
 
 # sequential left-fold via list_reduce reproduces Spark's aggregate() order →
@@ -304,7 +288,8 @@ def q_ann_topk(spark, sf_dir):
     buckets, cosines, and ranks exactly."""
     from .similarity import ann_topk_lsh
 
-    return ann_topk_lsh(_emb(spark, sf_dir), n_queries=5, k=5, n_planes=4)
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    return ann_topk_lsh(emb, n_queries=5, k=5, n_planes=4)
 
 
 # sequential list_reduce folds reproduce Spark's aggregate() order → the
@@ -355,7 +340,8 @@ def q_ivf_topk(spark, sf_dir):
     assignment, 2-probe search) — fully oracle-checked incl. ranks."""
     from .similarity import ivf_topk
 
-    return ivf_topk(_emb(spark, sf_dir), n_queries=5, k=5, probes=2, n_centroids=32)
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    return ivf_topk(emb, n_queries=5, k=5, probes=2, n_centroids=32)
 
 
 # sequential-fold cosine as a SQL macro body (bit-identical to Spark's
@@ -441,7 +427,8 @@ def q_semantic_pairs(spark, sf_dir):
     MinHash/SimHash candidate generators."""
     from .similarity import semantic_pairs
 
-    return semantic_pairs(_emb(spark, sf_dir), threshold=0.3, n_planes=4)
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    return semantic_pairs(emb, threshold=0.3, n_planes=4)
 
 
 _SQL_SEMANTIC_PAIRS = _BUCKETS_CTE + f""",
@@ -459,7 +446,8 @@ def q_semantic_dedup(spark, sf_dir):
     over the semantic pairs, keep min vec_id per component."""
     from .similarity import semantic_dedup_keep
 
-    return semantic_dedup_keep(_emb(spark, sf_dir), threshold=0.3, n_planes=4)
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    return semantic_dedup_keep(emb, threshold=0.3, n_planes=4)
 
 
 _SQL_SEMANTIC_DEDUP = _BUCKETS_CTE + f""",
@@ -521,7 +509,8 @@ GROUP BY 1, 2
 def q_knn_exact(spark, sf_dir):
     from .similarity import knn_topk_exact
 
-    return knn_topk_exact(_emb(spark, sf_dir), n_queries=5, k=5)
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    return knn_topk_exact(emb, n_queries=5, k=5)
 
 
 _SQL_KNN_EXACT = f"""
@@ -552,7 +541,8 @@ def q_ann_recall(spark, sf_dir):
     SQL-expressible end to end."""
     from .similarity import ann_recall_at_k
 
-    return ann_recall_at_k(_emb(spark, sf_dir), n_queries=5, k=5, n_planes=4)
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    return ann_recall_at_k(emb, n_queries=5, k=5, n_planes=4)
 
 
 _SQL_ANN_RECALL = f"""
@@ -2903,9 +2893,8 @@ def q_media_features(spark, sf_dir):
 
     from .media_features import extract_media_features
 
-    # spread=False: the unordered .limit() below keeps the FIRST rows in
-    # physical order, so the scan layout is part of this pinned fixture
-    fixture = _docs(spark, sf_dir, spread=False).select(
+    # unordered .limit(): the first rows of the one-file scan (test_hash_pins)
+    fixture = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.concat(
             F.lit("synth://v1/L/"),
@@ -2927,9 +2916,8 @@ def q_media_frames(spark, sf_dir):
 
     from .media_features import extract_media_features
 
-    # spread=False: the unordered .limit() below keeps the FIRST rows in
-    # physical order, so the scan layout is part of this pinned fixture
-    fixture = _docs(spark, sf_dir, spread=False).select(
+    # unordered .limit(): the first rows of the one-file scan (test_hash_pins)
+    fixture = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.concat(
             F.lit("synth://v1/L/"),
@@ -3033,9 +3021,8 @@ def q_media_train(spark, sf_dir):
 
     from .media_features import extract_train_tensors
 
-    # spread=False: the unordered .limit() below keeps the FIRST rows in
-    # physical order, so the scan layout is part of this pinned fixture
-    fixture = _docs(spark, sf_dir, spread=False).select(
+    # unordered .limit(): the first rows of the one-file scan (test_hash_pins)
+    fixture = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.concat(
             F.lit("synth://v1/L/"),
@@ -3057,9 +3044,8 @@ def q_image_eval(spark, sf_dir):
 
     from .image_transforms import extract_image_tensors
 
-    # spread=False: the unordered .limit() below keeps the FIRST rows in
-    # physical order, so the scan layout is part of this pinned fixture
-    fixture = _docs(spark, sf_dir, spread=False).select(
+    # unordered .limit(): the first rows of the one-file scan (test_hash_pins)
+    fixture = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.concat(
             F.lit("synth://v1/L/"),
@@ -3084,9 +3070,8 @@ def q_image_train(spark, sf_dir):
 
     from .image_transforms import AUG_IMAGENET, extract_image_tensors
 
-    # spread=False: the unordered .limit() below keeps the FIRST rows in
-    # physical order, so the scan layout is part of this pinned fixture
-    fixture = _docs(spark, sf_dir, spread=False).select(
+    # unordered .limit(): the first rows of the one-file scan (test_hash_pins)
+    fixture = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.concat(
             F.lit("synth://v1/L/"),
@@ -3735,7 +3720,8 @@ def q_embed_quantize(spark, sf_dir):
 
     from .similarity import quantize_embeddings_int8
 
-    q = quantize_embeddings_int8(_emb(spark, sf_dir))
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    q = quantize_embeddings_int8(emb)
     return q.select(
         "vec_id",
         "scale_bp",
@@ -4775,10 +4761,7 @@ def q_seq_pack(spark, sf_dir):
     stream placement via a distributed prefix sum (no global window)."""
     from .packing import pack_sequences
 
-    # spread=False: pack_sequences' first operator is its own range
-    # exchange over narrow (doc_id, ord_key, n_tok) rows — pre-shuffling
-    # the full text column costs more than the trivial map work saved
-    return pack_sequences(_docs(spark, sf_dir, spread=False), window=64)
+    return pack_sequences(_docs(spark, sf_dir), window=64)
 
 
 _SQL_SEQ_PACK = r"""
@@ -4812,10 +4795,7 @@ def q_snapshot_dedup(spark, sf_dir):
 
     from .dedup import snapshot_dedup
 
-    # spread=False: snapshot_dedup's minhash side spreads internally
-    # (keyed on doc_id); a second round-robin exchange of the raw text
-    # ahead of it was an A/B-measured regression
-    d = _docs(spark, sf_dir, spread=False)
+    d = _docs(spark, sf_dir)
     is_new = F.col("doc_id") % 5 == 4
     return snapshot_dedup(d.filter(is_new), d.filter(~is_new), bands=8, shingle_n=3)
 
@@ -5602,7 +5582,7 @@ def q_media_dhash(spark, sf_dir):
 
     from .media_features import media_dhash
 
-    refs = _docs(spark, sf_dir, spread=False).filter(
+    refs = _docs(spark, sf_dir).filter(
         F.col("doc_id") % 2 == 0
     ).select(
         F.col("doc_id").cast("string").alias("doc_id"),

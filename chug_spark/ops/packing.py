@@ -115,8 +115,7 @@ def budget_select(docs: DataFrame, token_budget: int) -> DataFrame:
     # vs 2.6-2.8 s for this shape): ``base`` feeds two consumers (the
     # in-bucket window and the bucket totals), so the fused projection
     # re-evaluates the expensive quality expression per consumer, while
-    # this join shape amortizes it through the join's exchanges.  A
-    # pre-spread of the scan was likewise neutral-to-negative here.)
+    # this join shape amortizes it through the join's exchanges.)
     scored = quality_score(docs).select("doc_id", "quality_bp")
     norm = normalize_text(F.col("text"))
     toks = docs.select(

@@ -59,9 +59,6 @@ def bm25_topk(
     (idf = ln(1 + (N - df + 0.5)/(df + 0.5)), fully deterministic
     tie-break (score desc, doc_id asc), rk <= k.
     """
-    from .dataflow import spread_small_scan
-
-    docs = spread_small_scan(docs, key="doc_id")
     base = docs.filter(F.col("text").isNotNull()).select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.filter(

@@ -55,14 +55,11 @@ def cosine_pairs_threshold(
     table (query side broadcast — the right plan for small Q × huge N).
     Threshold + rounding keeps the result set order-insensitive and
     fp-stable across engines."""
-    from .dataflow import spread_small_scan
-
     # norms are per-VECTOR, not per-pair: compute each side's norm once
     # before the pair join so a pair costs one dot fold instead of three
     # (dot + 2 norms); the product norm_q * norm_n is the identical double,
-    # so round(cosine, 4) is bit-equal to the per-pair form.  Tiny scans
-    # are spread first (guide §2.5).
-    base = valid_embeddings(spread_small_scan(emb)).select(
+    # so round(cosine, 4) is bit-equal to the per-pair form.
+    base = valid_embeddings(emb).select(
         F.col("vec_id").cast("long").alias("vec_id"),
         F.col("embedding"),
         norm(F.col("embedding")).alias("_n"),
@@ -371,16 +368,14 @@ def semantic_pairs(
     expansion — no self-join, memory bounded by the cap), so the op is the
     embedding-space sibling of the MinHash/SimHash text dedups and scales
     the same way: cost is buckets × cap², never corpus²."""
-    from .dataflow import spread_small_scan
     from .dedup import bucket_pairs
 
     # the bucket is a pure function of the embedding — compute it inline
     # instead of equi-joining the table against lsh_buckets(itself) on
     # vec_id (that self-join shuffled every embedding twice for no reason);
     # per-vector norms ride the pair payload so each candidate pair costs
-    # one dot fold (same doubles, bit-equal cosine).  Tiny scans spread
-    # first (guide §2.5).
-    base = valid_embeddings(spread_small_scan(emb)).select(
+    # one dot fold (same doubles, bit-equal cosine).
+    base = valid_embeddings(emb).select(
         F.col("vec_id").cast("long").alias("vec_id"), "embedding"
     )
     bucket = F.concat(

@@ -167,15 +167,7 @@ def payload_corpus_from_documents(
       doc corrupt in both ways reports only the anno error)
     - span 3 (even doc_id): raw trailing text ``tail <doc_id>``
     """
-    from .ops.dataflow import spread_small_scan
-
-    # hash-spread by doc_id BEFORE the heavy anno-JSON construction: a
-    # single-file corpus otherwise derives every span on 1-2 cores (guide
-    # §2.5), and the doc_id hash partitioning is reused by downstream
-    # per-doc windows/groupBys (guide §2.4).  No-op for multi-file tables.
-    docs = spread_small_scan(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"), key="doc_id"
-    )
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
 
     words = F.split(F.col("text"), " ")
     n_pages = F.ceil(F.size(words) / F.lit(WORDS_PER_PAGE)).cast("int")
@@ -296,15 +288,7 @@ def spans_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     - span 0 = anno JSON {"pages":[{"text": [line, ...]}, ...]}
     - span i (1..n_pages) = media span, media_ref = md5(doc_id||':'||page_idx)
     """
-    from .ops.dataflow import spread_small_scan
-
-    # hash-spread by doc_id BEFORE the heavy anno-JSON construction: a
-    # single-file corpus otherwise derives every span on 1-2 cores (guide
-    # §2.5), and the doc_id hash partitioning is reused by downstream
-    # per-doc windows/groupBys (guide §2.4).  No-op for multi-file tables.
-    docs = spread_small_scan(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"), key="doc_id"
-    )
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
 
     words = F.split(F.col("text"), " ")
     n_pages = F.ceil(F.size(words) / F.lit(WORDS_PER_PAGE)).cast("int")

@@ -143,3 +143,33 @@ def test_vocab_topk_plan_is_heap_topk(spark):
     plan = _phys(vocab_topk(docs, k=10))
     assert "TakeOrderedAndProject" in plan
     assert "Sort " not in plan.replace("TakeOrderedAndProject", "")
+
+
+def test_library_ops_keep_scan_partitioning(spark, tmp_path):
+    """Library ops leave the caller's partitioning alone: a single-file
+    documents table of >= 4 MB (small enough for a one-file scan, large
+    enough that a byte-threshold heuristic would repartition it) plans with
+    no Exchange between the FileScan and the first aggregate."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from chug_spark.ops.dsir import doc_gram_counts
+    from chug_spark.ops.entry import _docs
+
+    n_docs, words = 600, 512
+    texts = [" ".join(os.urandom(8).hex() for _ in range(words)) for _ in range(n_docs)]
+    table = pa.table({"doc_id": pa.array(range(n_docs), pa.int64()),
+                      "text": pa.array(texts)})
+    path = tmp_path / "documents.parquet"
+    pq.write_table(table, path)
+    assert path.stat().st_size >= 4 * 1024 * 1024
+
+    docs = _docs(spark, str(tmp_path))
+    assert "Exchange" not in _phys(docs), _phys(docs)
+
+    # the plan is linear: everything below the partial aggregate is scan side
+    plan = _phys(doc_gram_counts(docs, F.col("doc_id") % 2 == 0))
+    scan_side = plan.rsplit("HashAggregate", 1)[1]
+    assert "FileScan" in scan_side and "Exchange" not in scan_side, plan
