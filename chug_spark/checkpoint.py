@@ -5,9 +5,9 @@ The reference has no checkpointing — only the SharedCount epoch counter
 (src/chug/wds/helpers.py:41-68).  The north rule requires per-partition
 lineage + metrics and resumable batch extraction, so this module adds:
 
-- a *bucket* notion: ``bucket = pmod(xxhash64(doc_id, seed), n_buckets)`` —
-  the resume granularity (the Spark analogue of a shard; stable under any
-  partitioning);
+- a *bucket* notion: ``bucket = pmod(md5 draw of (doc_id, seed), n_buckets)``
+  — the resume granularity (the Spark analogue of a shard; stable under any
+  partitioning, and replayable by a DuckDB oracle);
 - :func:`write_with_checkpoint` — runs extraction bucket-wise append-only,
   recording (run_id, bucket, doc_count, span_count, error_count, status,
   attempt, wall_ms) per completed bucket;
@@ -39,18 +39,16 @@ CHECKPOINT_TABLE_SCHEMA = T.StructType(
 )
 
 
-def bucket_col(seed: int, n_buckets: int, engine: str = "xxhash64"):
-    """Deterministic bucket assignment: pmod(hash(doc_id, seed), n_buckets).
+def bucket_col(seed: int, n_buckets: int):
+    """Deterministic bucket assignment: pmod(md5 draw of doc_id, n_buckets).
 
-    ``engine='xxhash64'`` (default) is the JVM fast path; ``engine='md5'``
-    computes the same kind of draw portably (md5 exists in every engine, so
-    a DuckDB oracle can replay the exact bucket assignment and check the
-    per-bucket lineage metrics value-for-value).  The draw is the single
-    shared portable hash (ops/dataflow.shuffle_hash) — one definition to
-    keep byte-identical with the DuckDB _HEX15 replay."""
+    The draw is the single shared portable hash (ops/dataflow.shuffle_hash,
+    md5): md5 exists in every engine, so a DuckDB oracle replays the exact
+    bucket assignment (the _HEX15 replay in entry_ext) and checks the
+    per-bucket lineage metrics value-for-value."""
     from .ops.dataflow import shuffle_hash
 
-    return F.pmod(shuffle_hash(seed, 0, "doc_id", engine), F.lit(n_buckets)).cast("int")
+    return F.pmod(shuffle_hash(seed, 0, "doc_id", "md5"), F.lit(n_buckets)).cast("int")
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -75,12 +73,19 @@ def _fs_delete(spark: SparkSession, path: str) -> None:
 
 
 def read_checkpoint(spark: SparkSession, checkpoint_dir: str, run_id: str) -> DataFrame:
+    """The lineage rows of ``run_id``; a missing table means none yet.  Any
+    other read failure (a corrupt file) propagates: treating it as "no
+    buckets done" would silently re-run every bucket."""
     path = os.path.join(checkpoint_dir, "checkpoint")
-    try:
-        cp = spark.read.parquet(path)
-    except Exception:
+    if not _fs_exists(spark, path):
         return spark.createDataFrame([], CHECKPOINT_TABLE_SCHEMA)
-    return cp.filter(F.col("run_id") == run_id)
+    # explicit schema: a table dir holding no committed file yet (a crash
+    # during the first append) reads as zero rows instead of failing
+    # schema inference
+    return (
+        spark.read.schema(CHECKPOINT_TABLE_SCHEMA).parquet(path)
+        .filter(F.col("run_id") == run_id)
+    )
 
 
 def done_buckets(spark: SparkSession, checkpoint_dir: str, run_id: str) -> DataFrame:
@@ -92,14 +97,14 @@ def done_buckets(spark: SparkSession, checkpoint_dir: str, run_id: str) -> DataF
     )
 
 
-def _partition_count(spark: SparkSession, path: str):
-    """Read one written partition dir back; zero-row partitions write no
-    directory at all, so a missing path means empty."""
-    try:
-        df = spark.read.parquet(path)
-    except Exception:
+def _read_partition(spark: SparkSession, path: str) -> DataFrame | None:
+    """Read one written partition dir back, or None when it does not exist:
+    zero-row partitions write no directory at all, so missing means empty.
+    A partition that exists but does not read fails the job rather than
+    recording a zero-count ``done`` row."""
+    if not _fs_exists(spark, path):
         return None
-    return df
+    return spark.read.parquet(path)
 
 
 def write_with_checkpoint(
@@ -109,8 +114,6 @@ def write_with_checkpoint(
     out_dir: str,
     n_buckets: int = 8,
     fail_after: int | None = None,
-    single_pass: bool = False,
-    bucket_engine: str = "xxhash64",
 ) -> None:
     """Run doc-read extraction bucket-by-bucket with checkpointed lineage.
 
@@ -118,17 +121,6 @@ def write_with_checkpoint(
     simulate a mid-job crash; a subsequent call resumes the remaining buckets.
     Output parquet is partitioned by bucket so each bucket's write is
     idempotent (overwrite-by-partition).
-
-    ``single_pass=True`` removes the serial barrier chain: ALL unfinished
-    buckets run as ONE extraction over ``bucket IN (unfinished)`` with
-    dynamic-partition writes, then every checkpoint row lands in one append.
-    Per-bucket idempotency is preserved — a crash before the checkpoint
-    append leaves zero ``done`` rows for this pass and the resume dynamically
-    overwrites exactly the same partitions.  Resume granularity is coarser
-    (the whole pass repeats, not per bucket), which is the right trade when
-    few buckets remain or the cluster is reliable; the serial mode remains
-    the fine-grained default.  ``fail_after`` is a serial-mode concept and
-    rejected here.
 
     Read-amplification contract (scale design):
 
@@ -143,6 +135,7 @@ def write_with_checkpoint(
       a new run_id re-stages — and it is deleted once every bucket is done.
     """
     from .extract import extract_docread, flatten_spans  # local import, no cycle
+    from .sources.documents import overwrite_partition
 
     cfg.validate()
     cp_path = os.path.join(out_dir, "checkpoint")
@@ -157,88 +150,20 @@ def write_with_checkpoint(
         or 0
     )
 
-    # partitionOverwriteMode is scoped per-writer via .option(...) below (a
-    # session conf.set here would leak dynamic mode to unrelated writes).
+    # partitionOverwriteMode is scoped per-writer (overwrite_partition); a
+    # session conf.set here would leak dynamic mode to unrelated writes.
     # The staging write deliberately stays STATIC overwrite: a re-stage after
     # a mid-stage crash must truncate the whole dir, not merge with leftover
     # partial partitions.
     staged_path = os.path.join(out_dir, f"staged_{cfg.run_id}")
     if not _fs_exists(spark, os.path.join(staged_path, "_SUCCESS")):
         (
-            docs.withColumn("bucket", bucket_col(cfg.seed, n_buckets, bucket_engine))
+            docs.withColumn("bucket", bucket_col(cfg.seed, n_buckets))
             .write.mode("overwrite")
             .partitionBy("bucket")
             .parquet(staged_path)
         )
     docs_b = spark.read.parquet(staged_path)
-
-    if single_pass:
-        if fail_after is not None:
-            raise ValueError("fail_after is serial-mode only (one job here)")
-        unfinished = sorted(set(range(n_buckets)) - done)
-        if unfinished:
-            t0 = time.monotonic()
-            sub = docs_b.filter(F.col("bucket").isin(unfinished)).drop("bucket")
-            spans_out, errors = extract_docread(spark, sub, cfg)
-            # bucket is a pure function of doc_id — recompute on the outputs
-            # instead of threading it through the extraction plan
-            flat = flatten_spans(spans_out).withColumn(
-                "bucket", bucket_col(cfg.seed, n_buckets, bucket_engine)
-            )
-            (flat.write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("bucket").parquet(data_path))
-            err_rows = errors.withColumn(
-                "bucket", bucket_col(cfg.seed, n_buckets, bucket_engine)
-            )
-            (err_rows.write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("bucket").parquet(err_path))
-            wall_ms = int((time.monotonic() - t0) * 1000)
-
-            # per-bucket lineage from the WRITTEN parquet (plan never re-runs);
-            # zero-row buckets write no partition dir → fill with zeros
-            stats = {
-                r["bucket"]: r
-                for r in spark.read.parquet(data_path)
-                .filter(F.col("bucket").isin(unfinished))
-                .groupBy("bucket")
-                .agg(
-                    F.countDistinct("doc_id").alias("doc_count"),
-                    F.count(F.lit(1)).alias("span_count"),
-                )
-                .collect()
-            }
-            err_stats = {}
-            werr = _partition_count(spark, err_path)
-            if werr is not None:
-                err_stats = {
-                    r["bucket"]: r["error_count"]
-                    for r in werr.filter(F.col("bucket").isin(unfinished))
-                    .groupBy("bucket")
-                    .agg(F.count(F.lit(1)).alias("error_count"))
-                    .collect()
-                }
-            rows = [
-                (
-                    cfg.run_id,
-                    b,
-                    stats[b]["doc_count"] if b in stats else 0,
-                    stats[b]["span_count"] if b in stats else 0,
-                    err_stats.get(b, 0),
-                    "done",
-                    attempt,
-                    wall_ms,
-                )
-                for b in unfinished
-            ]
-            spark.createDataFrame(rows, CHECKPOINT_TABLE_SCHEMA).write.mode(
-                "append"
-            ).parquet(cp_path)
-            spark.catalog.clearCache()
-        if _fs_exists(spark, staged_path):
-            _fs_delete(spark, staged_path)
-        return
 
     completed = 0
     for b in range(n_buckets):
@@ -247,18 +172,12 @@ def write_with_checkpoint(
         t0 = time.monotonic()
         sub = docs_b.filter(F.col("bucket") == b).drop("bucket")
         spans_out, errors = extract_docread(spark, sub, cfg)
-        flat = flatten_spans(spans_out).withColumn("bucket", F.lit(b))
-        (flat.write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("bucket").parquet(data_path))
-        err_rows = errors.withColumn("bucket", F.lit(b))
-        (err_rows.write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("bucket").parquet(err_path))
+        overwrite_partition(flatten_spans(spans_out), "bucket", b, data_path)
+        overwrite_partition(errors, "bucket", b, err_path)
 
         # lineage metrics from the *written* partitions — the extraction plan
         # (incl. the policy/decode UDFs) never re-runs for stats
-        written = _partition_count(spark, os.path.join(data_path, f"bucket={b}"))
+        written = _read_partition(spark, os.path.join(data_path, f"bucket={b}"))
         if written is not None:
             stats = written.agg(
                 F.countDistinct("doc_id").alias("doc_count"),
@@ -267,7 +186,7 @@ def write_with_checkpoint(
             doc_count, span_count = stats["doc_count"], stats["span_count"]
         else:
             doc_count = span_count = 0
-        written_err = _partition_count(spark, os.path.join(err_path, f"bucket={b}"))
+        written_err = _read_partition(spark, os.path.join(err_path, f"bucket={b}"))
         err_count = written_err.count() if written_err is not None else 0
         wall_ms = int((time.monotonic() - t0) * 1000)
         row = [

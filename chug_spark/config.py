@@ -70,7 +70,6 @@ class ExtractJobCfg:
     error_handler: str = "log_and_continue"     # task_config.py:23 default
     seed: int = 0
     doc_key: str = DEFAULT_DOC_KEY
-    clean_text: bool = True                     # normalize raw text spans
 
     # scale knobs (north rule: per-partition size capping; the decode
     # repartition is salted over spark.sql.shuffle.partitions)

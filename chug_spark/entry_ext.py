@@ -976,8 +976,7 @@ def q_lineage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spans_from_documents(spark, sf_dir)
     cfg = ExtractJobCfg(page_sampling="all_valid", branch="passthrough",
                         run_id="driver_lineage")
-    write_with_checkpoint(spark, docs, cfg, out_dir, n_buckets=_LIN_BUCKETS,
-                          single_pass=True, bucket_engine="md5")
+    write_with_checkpoint(spark, docs, cfg, out_dir, n_buckets=_LIN_BUCKETS)
     return read_checkpoint(spark, out_dir, "driver_lineage").select(
         "bucket", "doc_count", "span_count", "error_count", "status", "attempt"
     )

@@ -275,15 +275,16 @@ def _prepare(docs: DataFrame, cfg: ExtractJobCfg) -> DataFrame:
     return df
 
 
-def _raw_items(text_spans_col, cfg: ExtractJobCfg):
-    """raw input text spans as (anchor, sub, kind, text, media_ref) items"""
+def _raw_items(text_spans_col):
+    """raw input text spans, whitespace-cleaned, as (anchor, sub, kind,
+    text, media_ref) items"""
     return F.transform(
         text_spans_col,
         lambda t: F.struct(
             t["offset"].alias("anchor"),
             F.lit(0).alias("sub"),
             F.lit("text").alias("kind"),
-            (clean_text(t["text"]) if cfg.clean_text else t["text"]).alias("text"),
+            clean_text(t["text"]).alias("text"),
             F.lit(None).cast("string").alias("media_ref"),
         ),
     )
@@ -458,16 +459,16 @@ def extract_docread(
         spark, docs, cfg
     )
     if pl_ok is None:
-        return _passthrough_nested(pt_ok, cfg), policy_errors
-    payload_nested = _payload_nested(pl_ok, decoded_ok, decode_errors, cfg)
+        return _passthrough_nested(pt_ok), policy_errors
+    payload_nested = _payload_nested(pl_ok, decoded_ok, decode_errors)
     errors = policy_errors.unionByName(decode_errors)
     if pt_ok is None:
         return payload_nested, errors
-    return _passthrough_nested(pt_ok, cfg).unionByName(payload_nested), errors
+    return _passthrough_nested(pt_ok).unionByName(payload_nested), errors
 
 
 def _payload_nested(
-    pl_ok: DataFrame, decoded_ok: DataFrame, decode_errors: DataFrame, cfg: ExtractJobCfg
+    pl_ok: DataFrame, decoded_ok: DataFrame, decode_errors: DataFrame
 ) -> DataFrame:
     """payload assembly: decode rows + raw input spans -> span items ->
     regroup per doc.
@@ -504,7 +505,7 @@ def _payload_nested(
     ).select("doc_id", "s.*")
     raw_spans = (
         pl_ok
-        .select("doc_id", F.explode(_raw_items(F.col("text_spans"), cfg)).alias("s"))
+        .select("doc_id", F.explode(_raw_items(F.col("text_spans"))).alias("s"))
         .select("doc_id", "s.*")
     )
     marks = decode_errors.select(
@@ -528,7 +529,7 @@ def _payload_nested(
     )
 
 
-def _passthrough_nested(pt_ok: DataFrame, cfg: ExtractJobCfg) -> DataFrame:
+def _passthrough_nested(pt_ok: DataFrame) -> DataFrame:
     # ---------------- passthrough branch: one projection, ZERO shuffle -------
     # pre-resolved media docs never touch Python and never explode: the final
     # ordered span array is assembled per-row with higher-order functions
@@ -559,7 +560,7 @@ def _passthrough_nested(pt_ok: DataFrame, cfg: ExtractJobCfg) -> DataFrame:
     return pt_ok.select(
         "doc_id",
         _finish_items(
-            F.concat(_raw_items(F.col("text_spans"), cfg), pt_page_items)
+            F.concat(_raw_items(F.col("text_spans")), pt_page_items)
         ).alias("spans"),
     )
 

@@ -8,8 +8,16 @@ Ship with::
         [--page-sampling all_valid] [--seed 0] [--render-dpi 144] \
         [--buckets 8] [--run-id run0] [--synth-docs N]
 
-Writes flat span rows + errors + the checkpointed lineage table under
---output; idempotent re-runs resume unfinished buckets (north rule).
+By default the run is checkpointed (``checkpoint.write_with_checkpoint``):
+the input is split into ``--buckets`` md5-drawn buckets, extracted one
+bucket at a time, and each finished bucket gets a row in the lineage table.
+Output under --output: ``spans/`` and ``errors/`` (partitioned by bucket)
+and ``checkpoint/``; a re-run with the same --output and --run-id resumes
+only the unfinished buckets.  ``--no-checkpoint`` extracts everything in
+one pass and writes plain ``spans/`` and ``errors/``; ``--stream`` drains
+--input incrementally (``streaming.stream.run_stream_extract``);
+``--layout-boxes`` writes reading-order spans instead.  The run prints one
+JSON line: wall_sec, docs_out (distinct doc_id in spans/), docs_per_sec.
 """
 
 from __future__ import annotations
@@ -40,11 +48,7 @@ def main(argv=None) -> int:
     p.add_argument("--buckets", type=int, default=8)
     p.add_argument("--run-id", default="run0")
     p.add_argument("--no-checkpoint", action="store_true",
-                   help="single-pass run without the bucketed checkpoint loop")
-    p.add_argument("--checkpoint-single-pass", action="store_true",
-                   help="checkpointed run, but all unfinished buckets in ONE "
-                        "extraction (dynamic-partition writes) instead of the "
-                        "serial per-bucket barrier chain")
+                   help="one extraction pass, without the bucketed checkpoint loop")
     p.add_argument("--stream", action="store_true",
                    help="incremental mode: drain --input (a parquet dir of "
                         "document files) via Structured Streaming "
@@ -135,8 +139,7 @@ def main(argv=None) -> int:
         flat.write.mode("overwrite").parquet(args.output + "/spans")
         errors.write.mode("overwrite").parquet(args.output + "/errors")
     else:
-        write_with_checkpoint(spark, docs, cfg, args.output, n_buckets=args.buckets,
-                              single_pass=args.checkpoint_single_pass)
+        write_with_checkpoint(spark, docs, cfg, args.output, n_buckets=args.buckets)
     wall = time.monotonic() - t0
 
     n_docs = spark.read.parquet(args.output + "/spans").select("doc_id").distinct().count()

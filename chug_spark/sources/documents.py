@@ -56,3 +56,21 @@ def write_spans(
     if max_records_per_file:
         w = w.option("maxRecordsPerFile", str(max_records_per_file))
     w.parquet(target)
+
+
+def overwrite_partition(df: DataFrame, col: str, value, path: str) -> None:
+    """Write ``df`` as the single partition ``col=value`` of the parquet dir
+    at ``path``, replacing only that partition (dynamic partition-overwrite,
+    scoped to this writer so the session conf never changes).  Re-running
+    the same write replaces its own output instead of appending duplicates:
+    the idempotent unit of the bucket checkpoint loop and of every
+    foreachBatch sink (at-least-once replay becomes effectively-once)."""
+    from pyspark.sql import functions as F
+
+    (
+        df.withColumn(col, F.lit(value))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(col)
+        .parquet(path)
+    )

@@ -39,6 +39,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..ops.dedup import normalize_text
+from ..sources.documents import overwrite_partition
+from .stream import drain_available_now
 
 DEDUP_INPUT_SCHEMA = "doc_id long, text string"
 DEDUP_OUTPUT_SCHEMA = "doc_id long, fp string"
@@ -80,41 +82,28 @@ def run_stream_dedup(
     kept_path = os.path.join(output_dir, "kept")
     ckpt = os.path.join(output_dir, "_checkpoint")
 
-    reader = spark.readStream.schema(DEDUP_INPUT_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
-
-    fp = F.md5(F.coalesce(normalize_text(F.col("text")), F.lit("")))
-    deduped = (
-        stream.select("doc_id", fp.alias("fp"))
-        .groupBy("fp")
-        .applyInPandasWithState(
-            _keep_first_fn,
-            outputStructType=DEDUP_OUTPUT_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+    def keep_first(stream: DataFrame) -> DataFrame:
+        fp = F.md5(F.coalesce(normalize_text(F.col("text")), F.lit("")))
+        return (
+            stream.select("doc_id", fp.alias("fp"))
+            .groupBy("fp")
+            .applyInPandasWithState(
+                _keep_first_fn,
+                outputStructType=DEDUP_OUTPUT_SCHEMA,
+                stateStructType=_STATE_SCHEMA,
+                outputMode="update",
+                timeoutConf=GroupStateTimeout.NoTimeout,
+            )
         )
-    )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(kept_path)
-        )
+        overwrite_partition(batch_df, "batch_id", int(batch_id), kept_path)
 
-    q = (
-        deduped.writeStream.foreachBatch(process_batch)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    drain_available_now(
+        spark.readStream.schema(DEDUP_INPUT_SCHEMA).format("parquet"),
+        input_dir, process_batch, ckpt, max_files_per_trigger,
+        transform=keep_first, output_mode="update",
     )
-    q.awaitTermination()
 
 
 def read_dedup_output(spark: SparkSession, output_dir: str) -> DataFrame:

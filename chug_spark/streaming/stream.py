@@ -24,13 +24,43 @@ a clean run (end-to-end effectively-once).
 from __future__ import annotations
 
 import os
-from typing import Optional
+from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamReader
 
 from ..config import ExtractJobCfg
 from ..extract import extract_docread, flatten_spans
 from ..schema import DOCUMENTS_SCHEMA
+from ..sources.documents import overwrite_partition
+
+
+def drain_available_now(
+    reader: DataStreamReader,
+    source: str,
+    process_batch: Callable[[DataFrame, int], None],
+    ckpt: str,
+    max_files_per_trigger: Optional[int] = None,
+    transform: Callable[[DataFrame], DataFrame] = lambda stream: stream,
+    output_mode: str = "append",
+) -> None:
+    """Drain every file currently in ``source`` through ``process_batch``
+    (foreachBatch, Trigger.AvailableNow) and return once done.  The
+    streaming checkpoint at ``ckpt`` records file-level progress (and any
+    operator state), so a later call processes only files it has not seen.
+    ``transform`` maps the file stream before the sink (a stateful operator
+    needs ``output_mode='update'``)."""
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    (
+        transform(reader.load(source))
+        .writeStream.foreachBatch(process_batch)
+        .outputMode(output_mode)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
 
 
 def process_one_batch(
@@ -44,25 +74,10 @@ def process_one_batch(
     is partitioned by batch_id and written with dynamic partition-overwrite,
     so re-processing a batch replaces its own partition instead of appending
     duplicates."""
-    from pyspark.sql import functions as F
-
     ss = batch_df.sparkSession
     spans_out, errors = extract_docread(ss, batch_df, cfg)
-    (
-        flatten_spans(spans_out)
-        .withColumn("batch_id", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(spans_path)
-    )
-    (
-        errors.withColumn("batch_id", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(errors_path)
-    )
+    overwrite_partition(flatten_spans(spans_out), "batch_id", int(batch_id), spans_path)
+    overwrite_partition(errors, "batch_id", int(batch_id), errors_path)
 
 
 def run_stream_extract(
@@ -84,21 +99,13 @@ def run_stream_extract(
     errors_path = os.path.join(output_dir, "errors")
     ckpt = os.path.join(output_dir, "_checkpoint")
 
-    reader = spark.readStream.schema(DOCUMENTS_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         process_one_batch(batch_df, batch_id, cfg, spans_path, errors_path)
 
-    q = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    drain_available_now(
+        spark.readStream.schema(DOCUMENTS_SCHEMA).format("parquet"),
+        input_dir, process_batch, ckpt, max_files_per_trigger,
     )
-    q.awaitTermination()
 
 
 def read_stream_output(spark: SparkSession, output_dir: str) -> DataFrame:
@@ -128,18 +135,10 @@ def run_stream_tar_ingest(
     samples_path = os.path.join(output_dir, "samples")
     ckpt = os.path.join(output_dir, "_checkpoint")
 
-    reader = spark.readStream.format("binaryFile").schema(
-        "path string, modificationTime timestamp, length long, content binary"
-    )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.load(shard_dir)
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         from typing import Iterator
 
         import pandas as pd
-        from pyspark.sql import functions as F
 
         def expand(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
             for pdf in batches:
@@ -149,22 +148,16 @@ def run_stream_tar_ingest(
         members = batch_df.select("path", "content").mapInPandas(
             expand, schema=MEMBER_SCHEMA
         )
-        (
-            group_members_adjacent(members)
-            .withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(samples_path)
+        overwrite_partition(
+            group_members_adjacent(members), "batch_id", int(batch_id), samples_path
         )
 
-    q = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    drain_available_now(
+        spark.readStream.format("binaryFile").schema(
+            "path string, modificationTime timestamp, length long, content binary"
+        ),
+        shard_dir, process_batch, ckpt, max_files_per_trigger,
     )
-    q.awaitTermination()
 
 
 def run_stream_warc_ingest(
@@ -188,36 +181,19 @@ def run_stream_warc_ingest(
     records_path = os.path.join(output_dir, "records")
     ckpt = os.path.join(output_dir, "_checkpoint")
 
-    reader = (
-        spark.readStream.format("binaryFile")
-        .schema("path string, modificationTime timestamp, length long, content binary")
-        .option("pathGlobFilter", "*.warc*")
-    )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.load(shard_dir)
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
         # the SAME parse entry point as the batch reader — the
         # streaming≡batch oracle must never mask a parser fork
-        records = records_from_binary_df(batch_df)
-        (
-            records.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(records_path)
+        overwrite_partition(
+            records_from_binary_df(batch_df), "batch_id", int(batch_id), records_path
         )
 
-    q = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    drain_available_now(
+        spark.readStream.format("binaryFile")
+        .schema("path string, modificationTime timestamp, length long, content binary")
+        .option("pathGlobFilter", "*.warc*"),
+        shard_dir, process_batch, ckpt, max_files_per_trigger,
     )
-    q.awaitTermination()
 
 
 def read_warc_stream_output(spark: SparkSession, output_dir: str) -> DataFrame:
@@ -244,27 +220,12 @@ def run_stream_html_ingest(
     samples_path = os.path.join(output_dir, "samples")
     ckpt = os.path.join(output_dir, "_checkpoint")
 
-    reader = spark.readStream.schema("doc_id string, html string").format("parquet")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.load(pages_dir)
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
-        (
-            html_to_docread_samples(batch_df)
-            .withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(samples_path)
+        overwrite_partition(
+            html_to_docread_samples(batch_df), "batch_id", int(batch_id), samples_path
         )
 
-    q = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    drain_available_now(
+        spark.readStream.schema("doc_id string, html string").format("parquet"),
+        pages_dir, process_batch, ckpt, max_files_per_trigger,
     )
-    q.awaitTermination()

@@ -111,7 +111,6 @@ def extract_doc(
     line_break: str = "\n",
     image_mode: str = "L",
     render_dpi: int = 150,
-    do_clean_text: bool = True,
 ):
     """Extract one document → (output_spans, error).
 
@@ -181,8 +180,7 @@ def extract_doc(
         out.append((anchor, 2 * k, "text", line_break.join(lines), None))
         out.append((anchor, 2 * k + 1, "media", None, refs[k]))
     for t in texts:
-        txt = clean_text(t["text"]) if do_clean_text else t["text"]
-        out.append((t["offset"], 0, "text", txt, None))
+        out.append((t["offset"], 0, "text", clean_text(t["text"]), None))
 
     out.sort(key=lambda r: (r[0], r[1]))
     return [

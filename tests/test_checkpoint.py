@@ -98,71 +98,9 @@ def test_checkpoint_lineage_metrics(spark, tmp_path):
     assert total_spans == read_output(spark, out_dir).count()
     assert all(r["wall_ms"] >= 0 and r["status"] == "done" for r in rows)
 
-def test_single_pass_mode_equals_serial(spark, tmp_path):
-    """Single-pass mode: all unfinished buckets in ONE extraction with
-    dynamic-partition writes; output and lineage metrics equal the serial
-    mode's; resume after a serial-mode crash works in single-pass."""
-    docs = _corpus(spark, n=60)
-    out_serial = str(tmp_path / "serial")
-    out_single = str(tmp_path / "single")
-
-    cfg_s = ExtractJobCfg(render_dpi=12, run_id="runS")
-    write_with_checkpoint(spark, docs, cfg_s, out_serial, n_buckets=5)
-
-    cfg_1 = ExtractJobCfg(render_dpi=12, run_id="runP")
-    write_with_checkpoint(spark, docs, cfg_1, out_single, n_buckets=5, single_pass=True)
-
-    assert _flat_set(read_output(spark, out_single)) == _flat_set(
-        read_output(spark, out_serial)
-    )
-
-    # per-bucket lineage identical (wall_ms/attempt aside)
-    key = lambda cp: {
-        r["bucket"]: (r["doc_count"], r["span_count"], r["error_count"], r["status"])
-        for r in cp.collect()
-    }
-    cp_s = key(read_checkpoint(spark, out_serial, "runS"))
-    cp_1 = key(read_checkpoint(spark, out_single, "runP"))
-    assert cp_s == cp_1 and len(cp_1) == 5
-
-    # idempotent no-op second invocation
-    write_with_checkpoint(spark, docs, cfg_1, out_single, n_buckets=5, single_pass=True)
-    assert _flat_set(read_output(spark, out_single)) == _flat_set(
-        read_output(spark, out_serial)
-    )
-
-    # staged copy cleaned up after the clean single-pass run
-    import os
-
-    assert not os.path.exists(f"{out_single}/staged_runP")
-
-
-def test_single_pass_resumes_serial_crash(spark, tmp_path):
-    docs = _corpus(spark, n=60)
-    cfg = ExtractJobCfg(render_dpi=12, run_id="runQ")
-    out_dir = str(tmp_path / "outQ")
-    with pytest.raises(RuntimeError, match="simulated failure"):
-        write_with_checkpoint(spark, docs, cfg, out_dir, n_buckets=5, fail_after=2)
-
-    # finish the remaining 3 buckets in one pass
-    write_with_checkpoint(spark, docs, cfg, out_dir, n_buckets=5, single_pass=True)
-    cp = read_checkpoint(spark, out_dir, "runQ")
-    assert cp.filter(F.col("status") == "done").count() == 5
-
-    spans_out, _ = extract_docread(spark, docs, cfg)
-    assert _flat_set(read_output(spark, out_dir)) == _flat_set(flatten_spans(spans_out))
-
-    # fail_after is a serial-mode concept
-    with pytest.raises(ValueError, match="serial-mode"):
-        write_with_checkpoint(
-            spark, docs, cfg, out_dir, n_buckets=5, single_pass=True, fail_after=1
-        )
-
-
-def test_md5_bucket_engine_equals_default_and_no_conf_leak(spark, tmp_path):
-    """bucket_engine='md5' (the portable-oracle path) produces the same final
-    table as the xxhash64 default, only bucketed differently; and the job
-    must not leak partitionOverwriteMode into the session conf (it is scoped
+def test_buckets_in_range_and_no_conf_leak(spark, tmp_path):
+    """Bucket assignment stays in [0, n_buckets); and the job must not leak
+    partitionOverwriteMode into the session conf (it is scoped
     per-writer)."""
     from chug_spark.checkpoint import bucket_col
 
@@ -170,21 +108,72 @@ def test_md5_bucket_engine_equals_default_and_no_conf_leak(spark, tmp_path):
 
     docs = _corpus(spark, n=50)
     cfg = ExtractJobCfg(render_dpi=12, run_id="runM")
-    out_md5, out_xx = str(tmp_path / "m"), str(tmp_path / "x")
-    write_with_checkpoint(spark, docs, cfg, out_md5, n_buckets=4,
-                          single_pass=True, bucket_engine="md5")
-    write_with_checkpoint(spark, docs, cfg, out_xx, n_buckets=4,
-                          single_pass=True)
-    assert _flat_set(read_output(spark, out_md5)) == _flat_set(
-        read_output(spark, out_xx)
-    )
+    write_with_checkpoint(spark, docs, cfg, str(tmp_path / "m"), n_buckets=4)
 
-    # md5 bucket assignment is in range and deterministic
-    b = docs.select(bucket_col(0, 4, "md5").alias("b")).distinct().collect()
+    b = docs.select(bucket_col(0, 4).alias("b")).distinct().collect()
     assert {r["b"] for r in b} <= set(range(4))
 
     after = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     assert after == before
 
-    with pytest.raises(ValueError, match="engine"):
-        docs.select(bucket_col(0, 4, "crc32"))
+
+def test_default_buckets_replay_in_duckdb(spark, tmp_path):
+    """Every doc lands in the bucket the lineage_report oracle computes:
+    DuckDB's md5 replay of the draw (``_HEX15`` over md5(doc_id || '|seed'))
+    mod n_buckets, with write_with_checkpoint's defaults."""
+    import os
+
+    import duckdb
+
+    from chug_spark.entry_ext import _HEX15
+
+    docs = _corpus(spark, n=40)
+    cfg = ExtractJobCfg(render_dpi=12, run_id="runR")
+    out_dir = str(tmp_path / "outR")
+    write_with_checkpoint(spark, docs, cfg, out_dir)
+
+    spans = os.path.join(out_dir, "spans")
+    written = sorted(d for d in os.listdir(spans) if d.startswith("bucket="))
+    assert len(written) > 1
+    expr = _HEX15.format(m=f"md5(doc_id || '|{cfg.seed}')")
+    for part in written:
+        b = int(part.split("=", 1)[1])
+        ids = [r["doc_id"] for r in
+               spark.read.parquet(os.path.join(spans, part)).select("doc_id").distinct().collect()]
+        got = duckdb.execute(
+            f"SELECT DISTINCT CAST({expr} % 8 AS INT) FROM (SELECT unnest(?) AS doc_id)",
+            [ids],
+        ).fetchall()
+        assert got == [(b,)], (part, got)
+
+
+def test_corrupt_lineage_reads_fail_closed(spark, tmp_path):
+    """An unreadable lineage file is an error, not "nothing done yet": a
+    corrupt checkpoint table must stop the resume instead of silently
+    re-running every bucket, and a corrupt written partition must not be
+    recorded as an empty ``done`` bucket.  A missing path still means
+    empty."""
+    import glob
+
+    from chug_spark.checkpoint import _read_partition
+
+    docs = _corpus(spark, n=20)
+    cfg = ExtractJobCfg(render_dpi=12, run_id="runX")
+    out_dir = str(tmp_path / "outX")
+    with pytest.raises(RuntimeError, match="simulated failure"):
+        write_with_checkpoint(spark, docs, cfg, out_dir, n_buckets=3, fail_after=1)
+
+    parts = glob.glob(f"{out_dir}/checkpoint/part-*.parquet")
+    assert parts
+    for part in parts:
+        with open(part, "wb") as f:
+            f.write(b"not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        write_with_checkpoint(spark, docs, cfg, out_dir, n_buckets=3)
+
+    assert _read_partition(spark, str(tmp_path / "absent" / "bucket=0")) is None
+    bad = tmp_path / "spans" / "bucket=0"
+    bad.mkdir(parents=True)
+    (bad / "part-00000.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        _read_partition(spark, str(bad)).count()
