@@ -11,19 +11,22 @@ lineage + metrics and resumable batch extraction, so this module adds:
 - :func:`write_with_checkpoint` — runs extraction bucket-wise append-only,
   recording (run_id, bucket, doc_count, span_count, error_count, status,
   attempt, wall_ms) per completed bucket;
-- resume = anti-join of the input against buckets already ``done``
-  (SURVEY.md §4 'Checkpoint/resume'), so a re-run after a crash decodes only
-  the missing buckets and the final table equals a single clean run.
+- resume = skip the buckets already ``done`` (SURVEY.md §4
+  'Checkpoint/resume'), so a re-run after a crash decodes only the missing
+  buckets and the final table equals a single clean run.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .schema import ERRORS_SCHEMA, FLAT_SPANS_SCHEMA
 
 CHECKPOINT_TABLE_SCHEMA = T.StructType(
     [
@@ -88,23 +91,24 @@ def read_checkpoint(spark: SparkSession, checkpoint_dir: str, run_id: str) -> Da
     )
 
 
-def done_buckets(spark: SparkSession, checkpoint_dir: str, run_id: str) -> DataFrame:
-    return (
-        read_checkpoint(spark, checkpoint_dir, run_id)
-        .filter(F.col("status") == "done")
-        .select("bucket")
-        .distinct()
-    )
-
-
-def _read_partition(spark: SparkSession, path: str) -> DataFrame | None:
-    """Read one written partition dir back, or None when it does not exist:
-    zero-row partitions write no directory at all, so missing means empty.
-    A partition that exists but does not read fails the job rather than
+def _read_partition(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame | None:
+    """Read one written partition dir back with its known ``schema`` (no
+    schema-inference job), or None when it does not exist: zero-row
+    partitions write no directory at all, so missing means empty.  A
+    partition that exists but does not read fails the job rather than
     recording a zero-count ``done`` row."""
     if not _fs_exists(spark, path):
         return None
-    return spark.read.parquet(path)
+    return spark.read.schema(schema).parquet(path)
+
+
+def _lineage_row(spark: SparkSession, values) -> DataFrame:
+    """One CHECKPOINT_TABLE_SCHEMA row as JVM-side literals: no Python RDD, so
+    no Python worker starts to ship a single row."""
+    return spark.range(0, 1, 1, 1).select(
+        *[F.lit(v).cast(f.dataType).alias(f.name)
+          for v, f in zip(values, CHECKPOINT_TABLE_SCHEMA.fields)]
+    )
 
 
 def write_with_checkpoint(
@@ -122,6 +126,23 @@ def write_with_checkpoint(
     Output parquet is partitioned by bucket so each bucket's write is
     idempotent (overwrite-by-partition).
 
+    Spark jobs per call (``tests/test_checkpoint.py`` guards the budget):
+
+    - the lineage table is read once: one collect, none when the table does
+      not exist yet.  ``done`` buckets and the attempt number come from its
+      rows.  When every bucket is ``done`` the call is a no-op: nothing is
+      staged, probed or extracted (a staged copy left behind is deleted);
+    - the input is staged once (one write, see below; a resume reuses it),
+      and for ``cfg.branch='auto'`` the branch shape is resolved ONCE over the
+      unfinished buckets' staged rows (``extract.resolve_branch``, two LIMIT-1
+      jobs).  A bucket is a subset of those rows, so the answer holds for
+      each bucket and no bucket probes again;
+    - 8 per unfinished bucket: the spans and errors partition writes, the
+      read-back aggregates over them (3 jobs for the distinct-doc and span
+      counts, 2 for the error count, under AQE; read with their known
+      schemas, so no schema-inference job) and the lineage row append (JVM
+      literals, no Python worker).
+
     Read-amplification contract (scale design):
 
     - the input is STAGED once, written partitioned by bucket: each bucket
@@ -134,41 +155,47 @@ def write_with_checkpoint(
       via the Hadoop FileSystem API, so reuse works on HDFS/S3 paths too),
       a new run_id re-stages — and it is deleted once every bucket is done.
     """
-    from .extract import extract_docread, flatten_spans  # local import, no cycle
+    from .extract import extract_docread, flatten_spans, resolve_branch  # local import, no cycle
     from .sources.documents import overwrite_partition
 
     cfg.validate()
     cp_path = os.path.join(out_dir, "checkpoint")
     data_path = os.path.join(out_dir, "spans")
     err_path = os.path.join(out_dir, "errors")
-
-    done = {r["bucket"] for r in done_buckets(spark, out_dir, cfg.run_id).collect()}
-    attempt = 1 + (
-        read_checkpoint(spark, out_dir, cfg.run_id)
-        .agg(F.max("attempt"))
-        .collect()[0][0]
-        or 0
-    )
-
-    # partitionOverwriteMode is scoped per-writer (overwrite_partition); a
-    # session conf.set here would leak dynamic mode to unrelated writes.
-    # The staging write deliberately stays STATIC overwrite: a re-stage after
-    # a mid-stage crash must truncate the whole dir, not merge with leftover
-    # partial partitions.
     staged_path = os.path.join(out_dir, f"staged_{cfg.run_id}")
-    if not _fs_exists(spark, os.path.join(staged_path, "_SUCCESS")):
-        (
-            docs.withColumn("bucket", bucket_col(cfg.seed, n_buckets))
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(staged_path)
-        )
-    docs_b = spark.read.parquet(staged_path)
 
-    completed = 0
-    for b in range(n_buckets):
-        if b in done:
-            continue
+    # one row per bucket, so the whole lineage of run_id fits the driver
+    lineage = (
+        read_checkpoint(spark, out_dir, cfg.run_id).collect()
+        if _fs_exists(spark, cp_path) else []
+    )
+    done = {r["bucket"] for r in lineage if r["status"] == "done"}
+    attempt = 1 + max((r["attempt"] or 0 for r in lineage), default=0)
+    todo = [b for b in range(n_buckets) if b not in done]
+
+    if todo:
+        # partitionOverwriteMode is scoped per-writer (overwrite_partition); a
+        # session conf.set here would leak dynamic mode to unrelated writes.
+        # The staging write deliberately stays STATIC overwrite: a re-stage
+        # after a mid-stage crash must truncate the whole dir, not merge with
+        # leftover partial partitions.
+        if not _fs_exists(spark, os.path.join(staged_path, "_SUCCESS")):
+            (
+                docs.withColumn("bucket", bucket_col(cfg.seed, n_buckets))
+                .write.mode("overwrite")
+                .partitionBy("bucket")
+                .parquet(staged_path)
+            )
+        # the staged schema is known: reading with it runs no inference job
+        docs_b = spark.read.schema(
+            T.StructType(docs.schema.fields + [T.StructField("bucket", T.IntegerType())])
+        ).parquet(staged_path)
+        branch = resolve_branch(
+            docs_b.filter(F.col("bucket").isin(todo)).drop("bucket"), cfg.branch
+        )
+        cfg = dataclasses.replace(cfg, branch=branch)
+
+    for completed, b in enumerate(todo, start=1):
         t0 = time.monotonic()
         sub = docs_b.filter(F.col("bucket") == b).drop("bucket")
         spans_out, errors = extract_docread(spark, sub, cfg)
@@ -177,7 +204,9 @@ def write_with_checkpoint(
 
         # lineage metrics from the *written* partitions — the extraction plan
         # (incl. the policy/decode UDFs) never re-runs for stats
-        written = _read_partition(spark, os.path.join(data_path, f"bucket={b}"))
+        written = _read_partition(
+            spark, os.path.join(data_path, f"bucket={b}"), FLAT_SPANS_SCHEMA
+        )
         if written is not None:
             stats = written.agg(
                 F.countDistinct("doc_id").alias("doc_count"),
@@ -186,18 +215,17 @@ def write_with_checkpoint(
             doc_count, span_count = stats["doc_count"], stats["span_count"]
         else:
             doc_count = span_count = 0
-        written_err = _read_partition(spark, os.path.join(err_path, f"bucket={b}"))
+        written_err = _read_partition(
+            spark, os.path.join(err_path, f"bucket={b}"), ERRORS_SCHEMA
+        )
         err_count = written_err.count() if written_err is not None else 0
         wall_ms = int((time.monotonic() - t0) * 1000)
-        row = [
-            (cfg.run_id, b, doc_count, span_count,
-             err_count, "done", attempt, wall_ms)
-        ]
-        spark.createDataFrame(row, CHECKPOINT_TABLE_SCHEMA).write.mode("append").parquet(cp_path)
+        _lineage_row(
+            spark, (cfg.run_id, b, doc_count, span_count, err_count, "done", attempt, wall_ms)
+        ).write.mode("append").parquet(cp_path)
         # drop this bucket's persisted decode output before the next one —
         # bounds the cached working set to one bucket
         spark.catalog.clearCache()
-        completed += 1
         if fail_after is not None and completed >= fail_after:
             raise RuntimeError(f"simulated failure after {completed} buckets")
 

@@ -304,28 +304,23 @@ def _finish_items(items):
     )
 
 
-def _extract_core(
-    spark: SparkSession, docs: DataFrame, cfg: ExtractJobCfg
-):
-    """Front of the extraction pipeline: branch probe + split,
-    per-branch derivation + page-sampling policy, payload chunking + decode
-    UDF.  Returns ``(pt_ok, pl_ok, policy_errors, decoded_ok,
-    decode_errors)``; :func:`extract_docread` assembles the spans from these.
-    """
-    # ---- cheap branch probe BEFORE any heavy work -------------------------
-    # payload vs passthrough is decided from the first media span's ref
-    # prefix alone (no json parse, no UDF), so each branch runs the heavy
-    # derivation only over its own subset of rows; for a pure-passthrough
-    # corpus the payload subtree filters everything out at the scan.
-    #
-    # Deliberate trade-off: the two branches each scan the input (2x read)
-    # instead of materializing a probe-tagged intermediate.  The probe is a
-    # cheap columnar expression evaluated during the scan, while a shared
-    # intermediate would cost a full-corpus shuffle or cache — infeasible at
-    # 10^12 docs — and would drag passthrough rows (zero-shuffle path)
-    # through the payload subtree's exchanges.  Scans are the cheap,
-    # horizontally-scaling resource here; shuffles are not.
-    _probe = F.coalesce(
+def _payload_probe():
+    """True for a doc whose first media span (by offset) is a payload ref.
+
+    Cheap branch probe evaluated BEFORE any heavy work: payload vs
+    passthrough is decided from the first media span's ref prefix alone (no
+    json parse, no UDF), so each branch runs the heavy derivation only over
+    its own subset of rows; for a pure-passthrough corpus the payload
+    subtree filters everything out at the scan.
+
+    Deliberate trade-off: the two branches each scan the input (2x read)
+    instead of materializing a probe-tagged intermediate.  The probe is a
+    cheap columnar expression evaluated during the scan, while a shared
+    intermediate would cost a full-corpus shuffle or cache — infeasible at
+    10^12 docs — and would drag passthrough rows (zero-shuffle path) through
+    the payload subtree's exchanges.  Scans are the cheap,
+    horizontally-scaling resource here; shuffles are not."""
+    return F.coalesce(
         F.get(
             F.expr(
                 "array_sort(filter(spans, s -> s.kind = 'media'),"
@@ -335,26 +330,49 @@ def _extract_core(
         )["media_ref"].startswith(media_mod.SYNTH_PREFIX),
         F.lit(False),
     )
-    # valid_sample gate: drop empty samples silently (tariterators.py:53)
-    gated = docs.filter(F.size("spans") > 0)
 
-    # ---- adaptive branch resolution ---------------------------------------
-    # An absent branch still schedules its whole subtree (second scan, policy
-    # UDF stage, chunk explode, repartition exchange, mapInPandas Python
-    # workers, persist, window) — measured 3.0 s of fixed overhead at sf0.1
-    # for a pure-passthrough corpus.  'auto' resolves the shape with two
-    # LIMIT-1 probe jobs: on a mixed corpus each stops at the first matching
-    # row (~one scan partition); on a homogeneous corpus one probe pays a
-    # single-column scan and buys skipping the entire other subtree.  At
-    # 10^12 rows the shape is a known table property — set cfg.branch
-    # explicitly and no probe job runs.
-    branch = cfg.branch
-    if branch == "auto":
-        has_pl = not gated.filter(_probe).isEmpty()
-        has_pt = not gated.filter(~_probe).isEmpty()
-        branch = "mixed" if (has_pl and has_pt) else ("payload" if has_pl else "passthrough")
-    pt_in = gated.filter(~_probe) if branch in ("mixed", "passthrough") else None
-    pl_in = gated.filter(_probe) if branch in ("mixed", "payload") else None
+
+def _gated(docs: DataFrame) -> DataFrame:
+    # valid_sample gate: drop empty samples silently (tariterators.py:53)
+    return docs.filter(F.size("spans") > 0)
+
+
+def resolve_branch(docs: DataFrame, branch: str) -> str:
+    """The corpus branch shape: ``branch`` itself unless it is 'auto'.
+
+    An absent branch still schedules its whole subtree (second scan, policy
+    UDF stage, chunk explode, repartition exchange, mapInPandas Python
+    workers, persist, window) — measured 3.0 s of fixed overhead at sf0.1
+    for a pure-passthrough corpus.  'auto' resolves the shape with two
+    LIMIT-1 probe jobs: on a mixed corpus each stops at the first matching
+    row (~one scan partition); on a homogeneous corpus one probe pays a
+    single-column scan and buys skipping the entire other subtree.  At
+    10^12 rows the shape is a known table property — set cfg.branch
+    explicitly and no probe job runs.
+
+    The answer holds for any subset of ``docs``: a subset of a homogeneous
+    corpus is homogeneous, and 'mixed' is correct for any input (an absent
+    branch filters to nothing)."""
+    if branch != "auto":
+        return branch
+    gated, probe = _gated(docs), _payload_probe()
+    has_pl = not gated.filter(probe).isEmpty()
+    has_pt = not gated.filter(~probe).isEmpty()
+    return "mixed" if (has_pl and has_pt) else ("payload" if has_pl else "passthrough")
+
+
+def _extract_core(
+    spark: SparkSession, docs: DataFrame, cfg: ExtractJobCfg
+):
+    """Front of the extraction pipeline: branch resolution + split,
+    per-branch derivation + page-sampling policy, payload chunking + decode
+    UDF.  Returns ``(pt_ok, pl_ok, policy_errors, decoded_ok,
+    decode_errors)``; :func:`extract_docread` assembles the spans from these.
+    """
+    branch = resolve_branch(docs, cfg.branch)
+    gated, probe = _gated(docs), _payload_probe()
+    pt_in = gated.filter(~probe) if branch in ("mixed", "passthrough") else None
+    pl_in = gated.filter(probe) if branch in ("mixed", "payload") else None
 
     select_pages = _policy_udf(cfg.page_sampling, cfg.seed)
 

@@ -108,24 +108,9 @@ PAGE_STRUCT = T.StructType(
 ANNO_SCHEMA = T.StructType([T.StructField("pages", T.ArrayType(PAGE_STRUCT))])
 
 # ---------------------------------------------------------------------------
-# Checkpoint / lineage table (engine-defined; Spark-side replacement for the
-# reference's error handlers + SharedCount epoch sync,
-# src/chug/wds/helpers.py:41-68, src/chug/common/types.py:9-17)
+# Error side-output (the checkpoint lineage table's schema is
+# checkpoint.CHECKPOINT_TABLE_SCHEMA)
 # ---------------------------------------------------------------------------
-
-CHECKPOINT_SCHEMA = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), nullable=False),
-        T.StructField("partition_id", T.IntegerType(), nullable=False),
-        T.StructField("shard", T.StringType()),
-        T.StructField("doc_count", T.LongType()),
-        T.StructField("span_count", T.LongType()),
-        T.StructField("error_count", T.LongType()),
-        T.StructField("status", T.StringType()),
-        T.StructField("attempt", T.IntegerType()),
-        T.StructField("wall_ms", T.LongType()),
-    ]
-)
 
 # Per-document error/lineage rows emitted by the extract UDF when the error
 # policy is a *continue* flavor (reference handler registry

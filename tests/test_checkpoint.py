@@ -156,6 +156,7 @@ def test_corrupt_lineage_reads_fail_closed(spark, tmp_path):
     import glob
 
     from chug_spark.checkpoint import _read_partition
+    from chug_spark.schema import FLAT_SPANS_SCHEMA
 
     docs = _corpus(spark, n=20)
     cfg = ExtractJobCfg(render_dpi=12, run_id="runX")
@@ -171,9 +172,94 @@ def test_corrupt_lineage_reads_fail_closed(spark, tmp_path):
     with pytest.raises(Exception, match="(?i)parquet"):
         write_with_checkpoint(spark, docs, cfg, out_dir, n_buckets=3)
 
-    assert _read_partition(spark, str(tmp_path / "absent" / "bucket=0")) is None
+    absent = str(tmp_path / "absent" / "bucket=0")
+    assert _read_partition(spark, absent, FLAT_SPANS_SCHEMA) is None
     bad = tmp_path / "spans" / "bucket=0"
     bad.mkdir(parents=True)
     (bad / "part-00000.parquet").write_bytes(b"not a parquet file")
     with pytest.raises(Exception, match="(?i)parquet"):
-        _read_partition(spark, str(bad)).count()
+        _read_partition(spark, str(bad), FLAT_SPANS_SCHEMA).count()
+
+
+def _passthrough_parquet(spark, path, n=60):
+    from chug_spark.synth import generate_docs
+
+    generate_docs(spark, n_docs=n, seed=31, payload_every=0).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run ``fn()`` with its Spark jobs tagged ``group``; return their count."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_done_run_is_a_noop(spark, tmp_path):
+    """A re-run of a fully done run_id reads the lineage table and stops: it
+    does not re-stage (or even read) the input, creates no ``staged_*`` dir
+    and leaves the output as it was."""
+    import os
+    import shutil
+
+    src = str(tmp_path / "in")
+    docs = _passthrough_parquet(spark, src, n=30)
+    cfg = ExtractJobCfg(render_dpi=12, run_id="runN")
+    out_dir = str(tmp_path / "outN")
+    write_with_checkpoint(spark, docs, cfg, out_dir, n_buckets=3)
+    before = _flat_set(read_output(spark, out_dir))
+    lineage = sorted(tuple(r) for r in read_checkpoint(spark, out_dir, "runN").collect())
+
+    shutil.rmtree(src)
+    jobs = _jobs_in_group(
+        spark, "noop_rerun",
+        lambda: write_with_checkpoint(spark, docs, cfg, out_dir, n_buckets=3),
+    )
+    assert jobs <= 1  # the lineage read only
+    assert not [d for d in os.listdir(out_dir) if d.startswith("staged_")]
+    assert _flat_set(read_output(spark, out_dir)) == before
+    assert sorted(tuple(r) for r in read_checkpoint(spark, out_dir, "runN").collect()) == lineage
+
+
+def test_checkpoint_job_budget(spark, tmp_path):
+    """Spark jobs per bucket stay at 8: the two partition writes, the
+    read-back aggregates (3 jobs for the spans, 2 for the errors, under AQE)
+    and the lineage append.  A per-bucket branch probe or a schema-inference
+    read-back would add to it."""
+    docs = _passthrough_parquet(spark, str(tmp_path / "in"))
+    cfg = ExtractJobCfg(render_dpi=12, run_id="runJ")
+    jobs = {
+        nb: _jobs_in_group(
+            spark, f"budget_{nb}",
+            lambda nb=nb: write_with_checkpoint(
+                spark, docs, cfg, str(tmp_path / f"out{nb}"), n_buckets=nb),
+        )
+        for nb in (2, 4)
+    }
+    per_bucket = (jobs[4] - jobs[2]) / 2
+    assert per_bucket <= 8, jobs
+    # the per-call cost: staging write + the two branch-probe jobs
+    assert jobs[2] - 2 * per_bucket <= 3, jobs
+
+
+def test_lineage_row_types(spark, tmp_path):
+    """The lineage table as written has CHECKPOINT_TABLE_SCHEMA's column
+    types, read back without a schema.  A literal row with a missing cast
+    writes ``int`` counts where the schema says ``long``: the resume's typed
+    read widens them silently, so only a schema-less reader would see it."""
+    from chug_spark.checkpoint import CHECKPOINT_TABLE_SCHEMA
+
+    docs = _corpus(spark, n=20)
+    cfg = ExtractJobCfg(render_dpi=12, run_id="runT")
+    out_dir = str(tmp_path / "outT")
+    write_with_checkpoint(spark, docs, cfg, out_dir, n_buckets=2)
+    written = spark.read.parquet(f"{out_dir}/checkpoint")
+    assert [(f.name, f.dataType) for f in written.schema.fields] == [
+        (f.name, f.dataType) for f in CHECKPOINT_TABLE_SCHEMA.fields
+    ]
+    assert written.count() == 2
